@@ -76,10 +76,9 @@ def neighbor_pairs(
     midpoint key and AQE handles skewed hubs; a motif engine would
     build the same join chain with less control.
 
-    ``sources`` (r13, the incremental delete rule's lever): an (id)
-    frame restricting the OUTPUT to pairs whose src is in the set —
-    applied to the src side BEFORE the 2-hop self-join, so the
-    expansion itself scales with |sources|, not |V|. Rows for a
+    ``sources``: an (id) frame restricting the OUTPUT to pairs whose
+    src is in the set — applied to the src side BEFORE the 2-hop
+    self-join, so the expansion itself scales with |sources|, not |V|. Rows for a
     retained source are identical to the unrestricted call's (the
     restriction only drops other sources' rows).
     """

@@ -22,6 +22,7 @@ Deliberate divergences from the reference (each documented in SURVEY §8):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -30,17 +31,9 @@ from pyspark.sql import functions as F
 from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
-from hgn_spark.graph.core import canonicalize, drop_isolated_vertices, symmetrize
-from hgn_spark.graph.rmetrics import (
-    candidate_common_members,
-    r_metrics_edges,
-    r_metrics_edges_pairs,
-)
-from hgn_spark.graph.weights import (
-    hybrid_edge_weights,
-    hybrid_edge_weights_members,
-    one_hot_cosine_similarities,
-)
+from hgn_spark.graph.core import canonicalize, drop_isolated_vertices
+from hgn_spark.graph.rmetrics import candidate_common_members, r_metrics_edges_pairs
+from hgn_spark.graph.weights import hybrid_edge_weights, one_hot_cosine_similarities
 
 
 @dataclass
@@ -56,31 +49,6 @@ class HGNParams:
     max_steps: int = 10
     max_sp_length: int = 2
     min_comp_size: int = 1
-    # r13 (VERDICT r12 #3): delete-rule formulation. "arrays" is the
-    # r12 shape (per-vertex neighbor ARRAYS + interpreted
-    # array_intersect per edge); "pairs" computes the identical
-    # r-metrics/weights VALUES via flat (id, nb) equi-joins inside
-    # codegen (r_metrics_edges_pairs — the shape the DuckDB oracle
-    # always used); "pairs_incremental" additionally scores steps 2+
-    # only on edges whose endpoint neighborhoods the previous
-    # deletions changed — the delta-maintenance scale path (step cost
-    # ~ |affected|, not |E|). All three land on identical communities
-    # (pinned by test); PROBE_hgn_phases_r13 measures the forms at
-    # sf0.1 and 1000x.
-    delete_rule_impl: str = "pairs"
-
-    def __post_init__(self) -> None:
-        # ADVICE r13 #1: an unrecognized impl (e.g. the typo
-        # 'pair_incremental') used to fall through to the legacy
-        # arrays path silently — the caller believed the incremental
-        # form was on while running the slow full recompute. Fail at
-        # construction instead.
-        allowed = ("arrays", "pairs", "pairs_incremental")
-        if self.delete_rule_impl not in allowed:
-            raise ValueError(
-                f"HGNParams.delete_rule_impl={self.delete_rule_impl!r} "
-                f"is not one of {allowed}"
-            )
 
 
 def hgn_communities(
@@ -88,90 +56,47 @@ def hgn_communities(
     edges: DataFrame,
     feature_cols: list[str],
     params: HGNParams | None = None,
-    phase_timings: dict[str, float] | None = None,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """Run the full loop → (id, component).
 
     ``vertices``: (id, *features); ``edges``: (src, dst) any orientation.
-
-    ``phase_timings`` (r12, VERDICT r11 #7): pass a dict to receive
-    wall-clock attribution per phase — init_sims / init_betweenness /
-    loop_delete_rule / loop_anti_join (the loop keys accumulate across
-    iterations; n_steps records how many ran) and final_cc. Every
-    phase boundary is an EAGER checkpoint (or the isEmpty action), so
-    the numbers are true materialization costs, not lazy-plan noise;
-    instrumentation costs two time.perf_counter() calls per phase and
-    nothing when the dict is omitted. The 1000x-class probe
-    (scripts/scale_probe_hgn_phases.py) uses this to attribute the
-    row's 13.7x growth instead of guessing which phase is superlinear.
     """
-    import time as _time
-
     p = params or HGNParams()
-    t = phase_timings
-
-    def _mark(key: str, t0: float) -> float:
-        dt = _time.perf_counter() - t0
-        if t is not None:
-            t[key] = round(t.get(key, 0.0) + dt, 3)
-        return dt
-
     jan = CheckpointJanitor(edges.sparkSession)
-    t0 = _time.perf_counter()
     # ``edges_canonical``: caller guarantees src < dst distinct rows
     # (e.g. derived_edges), so canonicalize's dedup exchange is a no-op
     # and the init checkpoint materializes the input directly.
     e, e_ids = jan.checkpoint(
         edges.select("src", "dst") if edges_canonical else canonicalize(edges)
     )
-    _mark("init_canonicalize", t0)
 
     # --- init step (computed once, like main.py:243-258) ---------------
-    # r14 (guide §2.6): the similarity and betweenness init frames both
-    # read the materialized `e` and nothing of each other — run their
-    # eager checkpoints concurrently. Their id sets are released at the
+    # The similarity and betweenness init frames both read the
+    # materialized `e` and nothing of each other, so their eager
+    # checkpoints run concurrently. Their id sets are released at the
     # same point after the loop, so concurrent id-diff attribution
-    # between the two checkpoints cannot mis-release a block. Phase
-    # timings record each chain's own wall clock (they overlap).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # between the two checkpoints cannot mis-release a block.
     def _init_sims():
-        t0 = _time.perf_counter()
         s = one_hot_cosine_similarities(e, vertices, feature_cols)
         # Symmetrize similarities so common-neighbor membership checks
         # see both orientations; the hybrid ratio is invariant to the
         # doubling (numerator and denominator scale together).
-        out = jan.checkpoint(
+        return jan.checkpoint(
             s.union(
                 s.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst"), "similarity"
                 )
             )
         )
-        _mark("init_sims", t0)
-        return out
 
     def _init_betw():
-        t0 = _time.perf_counter()
-        # INVARIANT (ADVICE r13 #4): betweenness is computed ONCE here,
-        # on the initial edge set, and never refreshed inside the loop —
-        # the reference does the same (main.py:243-258).
-        # pairs_incremental's soundness DEPENDS on this: with init-once
-        # betweenness (and init-once sims), an untouched edge's delete
-        # condition is time-invariant, so steps 2+ may re-score only
-        # edges whose endpoint neighborhoods the previous deletions
-        # changed. If a future change recomputes betweenness per step,
-        # every survivor's condition can flip and the incremental scope
-        # becomes unsound — such a change MUST either drop to full
-        # per-step scoring or reject delete_rule_impl="pairs_incremental".
-        out = jan.checkpoint(
-            edge_betweenness(
-                e, max_sp_length=p.max_sp_length, edges_canonical=True
-            )
+        # Betweenness is computed ONCE, on the initial edge set, and
+        # never refreshed inside the loop — the reference does the same
+        # (main.py:243-258).
+        return jan.checkpoint(
+            edge_betweenness(e, max_sp_length=p.max_sp_length, edges_canonical=True)
         )
-        _mark("init_betweenness", t0)
-        return out
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
         _f_sims = _pool.submit(_init_sims)
@@ -180,136 +105,39 @@ def hgn_communities(
         betw, betw_ids = _f_betw.result()
 
     # --- main loop ------------------------------------------------------
-    aff_v = None  # pairs_incremental: vertices whose neighborhoods changed
-    aff_ids = None
-    # Edge count carried across generations (VERDICT r13 what's-wrong
-    # #4): counted once on the first generation, then maintained by
-    # arithmetic — |e ⟕anti d| = |e| - |d| because to_delete is unique
-    # per canonical edge and a subset of e (it joins e's scored edges
-    # inner against canonical betweenness). The candidate-fraction
-    # gate then costs ONE action per step (cand.count()), not two.
-    n_edges: int | None = None
-    prev_n_del: int | None = None  # pairs_incremental pre-gate input
-    for _step in range(1, p.max_steps + 1):
-        if t is not None:
-            t["n_steps"] = _step
-        t0 = _time.perf_counter()
-        if p.delete_rule_impl in ("pairs", "pairs_incremental"):
-            # Pair form, loop-shaped (PROBE_hgn_subphase_r13): score
-            # once, CHECKPOINT the small candidate list, then expand
-            # common members for the candidates only — the full-edge
-            # member expansion is the phase's dominant term (49M rows
-            # at 1000x) and Catalyst would re-run the scored plan per
-            # consumer without the materialization barrier.
-            #
-            # pairs_incremental (r13, the next named mitigation from
-            # the sub-phase attribution): steps 2+ score only edges
-            # with an endpoint within distance 1 of a PREVIOUS
-            # deletion's endpoints (`aff_v`, captured on the
-            # pre-deletion graph below). Sound because an edge's
-            # metrics depend only on its endpoints' level-1/2
-            # neighborhoods, which deleting (a, b) changes exactly for
-            # vertices within distance 1 of {a, b} — every other
-            # survivor kept the scores that already passed the rule
-            # last step, so step N's deletions are a subset of the
-            # scoped set. Communities are identical to the full
-            # recompute (pinned by test).
-            scope = None
-            scope_ids = None
-            if (
-                p.delete_rule_impl == "pairs_incremental"
-                and aff_v is not None
-                # Deletion-fraction PRE-gate (r14, PROBE_hgn_cascade_r14):
-                # building the scope (two semi-joins + distinct +
-                # checkpoint over e) costs real time at 1000x, so only
-                # build it when it can pay. The measured mapping from
-                # last step's deletion fraction to this step's scope
-                # fraction on the 1000x cascade: 1.6% deleted -> 30%
-                # scoped (scoped scoring wins ~1.4x), 2.7% -> 49%
-                # (parity), 9% -> 84% (loses). Gate at 2% — below it
-                # the scope is likely small enough to win; above it
-                # score full and pay zero scope overhead. Free: both
-                # counts are already known.
-                and prev_n_del is not None
-                and 50 * prev_n_del < max(n_edges or 0, 1)
-            ):
-                scope, scope_ids = jan.checkpoint(
-                    e.join(
-                        aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
-                    )
-                    .unionByName(
-                        e.join(
-                            aff_v.withColumnRenamed("id", "dst"),
-                            "dst",
-                            "left_semi",
-                        )
-                    )
-                    .distinct()
-                )
-            if n_edges is None:
-                n_edges = e.count()
-            if scope is not None:
-                # Scope-fraction gate (r14, measured in
-                # PROBE_hgn_cascade_r14 before the gate existed): at
-                # 1000x the scoped step costs ~0.65x of full scoring
-                # at 30% scope and ~0.39x at 3.6%, but is at PARITY OR
-                # WORSE at scope fractions >= ~50% — the scope
-                # semi-joins plus scoped scoring cost what they save.
-                # Score full when the affected fraction is >= 1/3;
-                # results are identical either way (an unscoped edge's
-                # metrics are unchanged, so full scoring re-accepts it
-                # exactly as skipping it would). One count() on a
-                # materialized checkpoint per incremental step.
-                n_scope = scope.count()
-                if t is not None:
-                    t.setdefault("n_scope_per_step", []).append(n_scope)
-                if 3 * n_scope >= n_edges:
-                    jan.release(scope_ids)
-                    scope, scope_ids = None, None
-            else:
-                n_scope = None
-                if (
-                    t is not None
-                    and p.delete_rule_impl == "pairs_incremental"
-                    and aff_v is not None
-                ):
-                    # Pre-gate chose full scoring — keep the per-step
-                    # arrays aligned (None = scope not built).
-                    t.setdefault("n_scope_per_step", []).append(None)
-            if t is not None:
-                # |edges actually scored| this step — the quantity the
-                # incremental rule's step cost should scale with.
-                t.setdefault("n_scored_per_step", []).append(
-                    n_scope if scope is not None else n_edges
-                )
-            # e is canonical by construction (canonicalize at init;
-            # anti-join deletion preserves it) — every symmetrize in the
-            # scoring path may skip its dedup exchange (r15, guide §2.4).
-            scored, _members_all = r_metrics_edges_pairs(
-                e, p.r_lvl1_thres, p.r_lvl2_thres, scope=scope, edges_canonical=True
-            )
-            cand, cand_ids = jan.checkpoint(
-                scored.filter(~F.col("keepit")).select("src", "dst")
-            )
-            # Source-restricting the member expansion pays only when
-            # candidates are a small fraction (the r13 A/B: +12% at
-            # sf0.1 where most edges are candidates, bounded-by-|cand|
-            # at scale where they are not). cand is materialized, so
-            # its count is metadata-cheap; the edge count is carried
-            # across generations (see n_edges above).
-            restrict = 4 * cand.count() < max(n_edges, 1)
-            weights = hybrid_edge_weights_members(
-                candidate_common_members(
-                    e, cand, restrict_sources=restrict, edges_canonical=True
-                ),
-                sims,
-                p.feature_min_avg,
-            )
-        else:
-            cand_ids = None
-            scope_ids = None
-            edges_r = r_metrics_edges(e, p.r_lvl1_thres, p.r_lvl2_thres)
-            weights = hybrid_edge_weights(edges_r, sims, p.feature_min_avg)
+    # Edge count carried across generations: counted once, then
+    # maintained by arithmetic — |e ⟕anti d| = |e| - |d| because
+    # to_delete is unique per canonical edge and a subset of e (it
+    # joins e's scored edges inner against canonical betweenness). The
+    # candidate-fraction gate then costs ONE action per step
+    # (cand.count()), not two.
+    n_edges = e.count()
+    for _ in range(p.max_steps):
+        # Score once, CHECKPOINT the small candidate list, then expand
+        # common members for the candidates only: the full-edge member
+        # expansion is the step's dominant term, and Catalyst would
+        # re-run the scored plan per consumer without the
+        # materialization barrier. e is canonical by construction
+        # (canonicalize at init; anti-join deletion preserves it), so
+        # every symmetrize in the scoring path may skip its dedup
+        # exchange.
+        scored = r_metrics_edges_pairs(
+            e, p.r_lvl1_thres, p.r_lvl2_thres, edges_canonical=True
+        )
+        cand, cand_ids = jan.checkpoint(
+            scored.filter(~F.col("keepit")).select("src", "dst")
+        )
+        # Source-restricting the member expansion pays only when
+        # candidates are a small fraction (see candidate_common_members).
+        # cand is materialized, so its count is metadata-cheap.
+        restrict = 4 * cand.count() < max(n_edges, 1)
+        weights = hybrid_edge_weights(
+            candidate_common_members(
+                e, cand, restrict_sources=restrict, edges_canonical=True
+            ),
+            sims,
+            p.feature_min_avg,
+        )
         # Canonical edges → single equi-join against canonical betweenness
         # (the reference probes both orientations, main.py:130-134).
         to_delete, td_ids = jan.checkpoint(
@@ -327,53 +155,15 @@ def hgn_communities(
         # on a materialized checkpoint, and the count maintains n_edges
         # for the next step's gate without re-counting e.
         n_del = to_delete.count()
-        prev_n_del = n_del
-        empty = n_del == 0
-        dt = _mark("loop_delete_rule", t0)
-        if t is not None:
-            # Per-step breakdown (r14, VERDICT r13 #1): the cascade
-            # probe needs step-2+ cost separately from the accumulated
-            # total to show the incremental rule's step cost scaling
-            # with |affected| instead of |E|. n_deleted_per_step gives
-            # the cascade shape alongside.
-            t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
-            t.setdefault("n_deleted_per_step", []).append(n_del)
         # The candidate list fed to_delete, now materialized — free it.
-        if cand_ids is not None:
-            jan.release(cand_ids)
-        if scope_ids is not None:
-            jan.release(scope_ids)
-        if empty:
+        jan.release(cand_ids)
+        if n_del == 0:
             jan.release(td_ids)
             break
-        if p.delete_rule_impl == "pairs_incremental":
-            # Next step's scope seed: the deleted endpoints plus their
-            # neighbors in THIS (pre-deletion) generation — exactly
-            # the vertices whose level-1/2 neighborhoods the deletion
-            # changes. Captured before e is replaced.
-            dv = (
-                to_delete.select(F.col("src").alias("id"))
-                .unionByName(to_delete.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            nb = (
-                symmetrize(e, assume_canonical=True)
-                .join(dv.withColumnRenamed("id", "src"), "src", "left_semi")
-                .select(F.col("dst").alias("id"))
-            )
-            new_aff, new_aff_ids = jan.checkpoint(
-                dv.unionByName(nb).distinct()
-            )
-            if aff_ids is not None:
-                jan.release(aff_ids)
-            aff_v, aff_ids = new_aff, new_aff_ids
-        t0 = _time.perf_counter()
         new_e, new_e_ids = jan.checkpoint(
             e.join(to_delete, ["src", "dst"], "left_anti")
         )
-        _mark("loop_anti_join", t0)
-        if n_edges is not None:
-            n_edges -= n_del
+        n_edges -= n_del
         # Iteration N's edge set is materialized: its inputs — the
         # previous generation and this round's deletion set — can never
         # be read again. Free them now so the loop carries ONE edge
@@ -385,17 +175,13 @@ def hgn_communities(
         jan.release(td_ids)
         e_ids = new_e_ids
 
-    t0 = _time.perf_counter()
     survivors = drop_isolated_vertices(vertices.select("id"), e, edges_canonical=True)
     out = connected_components(e, survivors, edges_canonical=True)
-    _mark("final_cc", t0)
     # The returned plan references only the final edge generation (via
     # the survivors join) and CC's fixpoint mapping — the init-step
     # similarity and betweenness checkpoints are dead weight from here.
     jan.release(sims_ids)
     jan.release(betw_ids)
-    if aff_ids is not None:
-        jan.release(aff_ids)
     # The final edge generation stays lazily referenced by the returned
     # plan (survivors join + CC mapping) — park it for clear-time
     # release instead of leaving it to async GC.

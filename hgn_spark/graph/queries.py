@@ -30,7 +30,7 @@ from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import degrees, neighbors
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
-from hgn_spark.graph.rmetrics import r_metrics_edges
+from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
 from hgn_spark.registry import register
 
 R1_THRES = 0.25
@@ -108,12 +108,12 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # streaming_stateful_user_counts oracle row. Every non-isolated
     # vertex appears in both halves (lvl2 ⊇ 1-hop), so the inner join
     # loses nothing.
-    # The `edge_csv` branch (r10, VERDICT r9 #5 — the S2 evidence
-    # upgrade) recomputes the DEGREE half from a CSV round trip of the
-    # edge list read back with load_edges_csv's DECLARED ±weight
-    # schema (no inference pass): identical degrees only if the text
-    # round trip loses/corrupts no edge. Its oracle twin is the same
-    # deg half replayed — the lvl2 half is shared, computed once.
+    # The `edge_csv` branch recomputes the DEGREE half from a CSV
+    # round trip of the edge list read back with load_edges_csv's
+    # DECLARED ±weight schema (no inference pass): identical degrees
+    # only if the text round trip loses/corrupts no edge. Its oracle
+    # twin is the same deg half replayed — the lvl2 half is shared,
+    # computed once.
     oracle=f"""
     WITH {GRAPH_CTE},
     deg AS (SELECT src AS id, count(*) AS degree FROM sym GROUP BY src),
@@ -230,8 +230,9 @@ def graph_neighbors_lvl2(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_rmetrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11/r12/r21/r22 + keepit per edge (G4 with UD2-UD5 as native
-    expressions, graph_tools/graph_tools.py:372-435)."""
-    scored = r_metrics_edges(
+    expressions, graph_tools/graph_tools.py:372-435) — the same scoring
+    the HGN loop runs each step."""
+    scored = r_metrics_edges_pairs(
         derived_edges(spark, sf_dir), R1_THRES, R2_THRES, edges_canonical=True
     )
     return scored.select(
@@ -416,7 +417,7 @@ PPR_N_SEEDS = 2  # personalized branch: the two lowest vertex ids
 def _pagerank_oracle() -> str:
     """DuckDB replay of the fixed-iteration power method (the
     `_hgn_oracle` unrolling technique), BOTH recurrences as labeled
-    `method` branches (the r8 evidence upgrade — VERDICT r7 #2):
+    `method` branches, so both are hash-checked:
 
     - 'uniform': classic PageRank — uniform start over the symmetrized
       vertex set, then PR_ITER rounds of one join + one grouped sum;
@@ -496,7 +497,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'uniform': the classic power iteration;
     - 'ppr': personalized PageRank seeded on the PPR_N_SEEDS lowest
       vertex ids (deterministic on both sides) — the seed-expansion
-      primitive, previously pytest-tier (VERDICT r7 #2).
+      primitive.
 
     Fixed iteration counts are registered constants, so the oracle
     UNROLLS both loops into join+groupBy CTEs (same technique as
@@ -542,9 +543,9 @@ LPA_ITER = 10
 
 def _lpa_oracle() -> str:
     """DuckDB replay of LPA_ITER synchronous label-propagation rounds
-    plus the Newman modularity of the final assignment (the r8
-    evidence upgrade — VERDICT r7 #3: the community row carries a
-    hash-checked QUALITY metric, not just a partition).
+    plus the Newman modularity of the final assignment, so the
+    community row carries a hash-checked QUALITY metric, not just a
+    partition.
 
     Per round: neighbor label counts, then argmax by (count desc, label
     asc) expressed as min(label) among max-count labels — the exact

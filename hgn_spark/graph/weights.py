@@ -22,8 +22,9 @@ Hybrid weights: the reference's j_1/j_2/j_3 right-join dance
 (graph_tools/graph_tools.py:437-517) computes, per candidate-delete
 edge e, the fraction of similarity edges with BOTH endpoints inside
 e's common-neighbor set that score ≥ feature_min_avg. Re-derived here
-as explode + two equi-joins (SURVEY §2.9 G10 note): same result set,
-no right-outer null rows, no float-equality join key (§8.5).
+as two equi-joins over common-member rows (SURVEY §2.9 G10 note): same
+result set, no right-outer null rows, no float-equality join key
+(§8.5).
 """
 
 from __future__ import annotations
@@ -134,79 +135,33 @@ def ml_one_hot_cosine_similarities(
 
 
 def hybrid_edge_weights(
-    edges_r: DataFrame,
-    similarities: DataFrame,
-    feature_min_avg: float,
-) -> DataFrame:
-    """→ (src, dst, edge_weight) for candidate-delete (keepit=False) edges.
-
-    edge_weight = fraction of similarity edges whose BOTH endpoints lie
-    in the candidate edge's common-neighbor set with similarity ≥
-    feature_min_avg — the reference's final ratio agg
-    (graph_tools/graph_tools.py:512-516).
-
-    Derivation: explode the common-neighbor array once, equi-join
-    similarity edges on their src endpoint, then semi-join the pair
-    against the exploded set again on the dst endpoint. Two shuffles,
-    both on real equi keys; the reference needed two right-outer joins,
-    a 5-key self-join on a FLOAT column, and three parquet round-trips
-    for the same set.
-    """
-    cand = edges_r.filter(~F.col("keepit")).select(
-        F.col("src").alias("nb_src"),
-        F.col("dst").alias("nb_dst"),
-        "common_neighbors",
-    )
-    cn = cand.select(
-        "nb_src", "nb_dst", F.explode("common_neighbors").alias("member")
-    )
-    return _weights_from_members(cn, similarities, feature_min_avg)
-
-
-def hybrid_edge_weights_pairs(
-    scored: DataFrame,
-    members2: DataFrame,
-    similarities: DataFrame,
-    feature_min_avg: float,
-) -> DataFrame:
-    """`hybrid_edge_weights` fed by the PAIR-FORM r-metrics output
-    (r_metrics_edges_pairs): the candidate edges' common-neighbor
-    members arrive as (src, dst, member) rows instead of an array that
-    would be exploded right back into the same rows. Identical values
-    (the array path's explode(array_intersect) yields exactly these
-    distinct rows); one semi-join replaces the array build + explode.
-    """
-    cand = scored.filter(~F.col("keepit")).select("src", "dst")
-    cn = members2.join(cand, ["src", "dst"], "left_semi").select(
-        F.col("src").alias("nb_src"),
-        F.col("dst").alias("nb_dst"),
-        "member",
-    )
-    return _weights_from_members(cn, similarities, feature_min_avg)
-
-
-def hybrid_edge_weights_members(
     cand_members: DataFrame,
     similarities: DataFrame,
     feature_min_avg: float,
 ) -> DataFrame:
-    """Weights from pre-restricted candidate member rows (src, dst,
-    member) — the loop-shaped entry point (see candidate_common_members):
-    no keepit filter and no semi-join, because the caller already
-    generated members for exactly the candidate edges."""
+    """Candidate common-member rows (src, dst, member) → (src, dst,
+    edge_weight), one row per candidate edge with at least one
+    similarity edge inside its common-neighbor set.
+
+    edge_weight = fraction of similarity edges whose BOTH endpoints lie
+    in the candidate edge's common-neighbor set with similarity ≥
+    feature_min_avg — the reference's final ratio agg
+    (graph_tools/graph_tools.py:512-516). ``cand_members`` comes from
+    `rmetrics.candidate_common_members`, so it already holds exactly
+    the candidate edges' members.
+
+    Derivation: equi-join similarity edges on their src endpoint
+    against the member rows, then semi-join the pair against the
+    member rows again on the dst endpoint. Two shuffles, both on real
+    equi keys; the reference needed two right-outer joins, a 5-key
+    self-join on a FLOAT column, and three parquet round-trips for the
+    same set.
+    """
     cn = cand_members.select(
         F.col("src").alias("nb_src"),
         F.col("dst").alias("nb_dst"),
         "member",
     )
-    return _weights_from_members(cn, similarities, feature_min_avg)
-
-
-def _weights_from_members(
-    cn: DataFrame, similarities: DataFrame, feature_min_avg: float
-) -> DataFrame:
-    """Shared tail: (nb_src, nb_dst, member) rows → per-edge
-    edge_weight ratio (see hybrid_edge_weights for the derivation)."""
     sims = similarities.select(
         F.col("src").alias("s_src"), F.col("dst").alias("s_dst"), "similarity"
     )

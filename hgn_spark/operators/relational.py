@@ -33,20 +33,22 @@ from hgn_spark.registry import register
 
 @register(
     "flagship_revenue_by_nation",
-    # The oracle mirrors the Spark plan's TWO-STAGE summation (per-order
-    # partials, then per-nation totals) instead of one flat sum: double
-    # addition is non-associative, and matching the aggregation shape
-    # keeps both engines' partial sums aligned so the round(…, 2) gate
-    # can't straddle a half-cent boundary (ADVICE r2: association drift).
+    # Revenue is summed as DECIMAL on both sides: a double sum depends on
+    # the order of its additions, which varies with the partitioning,
+    # and when a nation's total lands on a half cent the round(…, 2)
+    # flips by a cent. Prices and discounts are stored as doubles that
+    # hold 2-decimal values, so the DECIMAL(15,2) casts are exact, and
+    # so is the sum; the rounded total is cast back to double.
     oracle="""
     WITH per_order AS (
       SELECT l_orderkey,
-             sum(l_extendedprice * (1 - l_discount)) AS rev,
+             sum(CAST(l_extendedprice AS DECIMAL(15, 2))
+                 * (1 - CAST(l_discount AS DECIMAL(15, 2)))) AS rev,
              sum(l_quantity) AS qty,
              count(*) AS n_items
       FROM lineitem GROUP BY l_orderkey)
     SELECT n.n_name AS nation,
-           round(sum(p.rev), 2) AS revenue,
+           CAST(round(sum(p.rev), 2) AS DOUBLE) AS revenue,
            count(*) AS n_orders,
            round(sum(p.qty) / sum(p.n_items), 4) AS avg_qty
     FROM per_order p
@@ -73,7 +75,10 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
     nation = load_table(spark, sf_dir, "nation")
     per_order = lineitem.groupBy("l_orderkey").agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
+        F.sum(
+            F.col("l_extendedprice").cast("decimal(15,2)")
+            * (1 - F.col("l_discount").cast("decimal(15,2)"))
+        ).alias("rev"),
         F.sum("l_quantity").alias("qty"),
         F.count(F.lit(1)).alias("n_items"),
     )
@@ -83,7 +88,7 @@ def flagship_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.round(F.sum("rev"), 2).alias("revenue"),
+            F.round(F.sum("rev"), 2).cast("double").alias("revenue"),
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("qty") / F.sum("n_items"), 4).alias("avg_qty"),
         )
@@ -353,9 +358,10 @@ def scan_projection_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver scale, so the hatch's limit() passes ALL rows and a
         # lossy pandas-boundary conversion (dtype coercion,
         # truncation) is the only way the branch can diverge from its
-        # oracle twin.
+        # oracle twin. The schema is passed because an empty subset
+        # leaves pandas nothing to infer it from.
         pan = base.filter(F.col("l_orderkey") % 29 == 0)
-        return spark.createDataFrame(to_pandas_sample(pan))
+        return spark.createDataFrame(to_pandas_sample(pan), schema=pan.schema)
 
     with ThreadPoolExecutor(max_workers=6) as pool:
         f_csv = pool.submit(_chain_csv)

@@ -24,7 +24,7 @@ from hgn_spark.graph.components import (
 )
 from hgn_spark.graph.core import degrees, drop_isolated_vertices, neighbors, symmetrize
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
-from hgn_spark.graph.rmetrics import r_metrics_edges
+from hgn_spark.graph.rmetrics import candidate_common_members, r_metrics_edges_pairs
 from hgn_spark.graph.weights import hybrid_edge_weights, one_hot_cosine_similarities
 
 EDGES = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
@@ -65,19 +65,19 @@ def test_symmetrize_assume_canonical_same_rows(edges):
 
 
 def test_rmetrics_pairs_canonical_flag_identical(edges):
-    """r_metrics_edges_pairs with edges_canonical=True (the HGN loop's
-    call shape since r15) equals the safe default on canonical input —
-    scored values and member rows both."""
-    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
-
-    s0, m0 = r_metrics_edges_pairs(edges, 0.25, 0.9)
-    s1, m1 = r_metrics_edges_pairs(edges, 0.25, 0.9, edges_canonical=True)
+    """r_metrics_edges_pairs and candidate_common_members with
+    edges_canonical=True (the HGN loop's call shape) equal the safe
+    default on canonical input — scored values and member rows both."""
+    s0 = r_metrics_edges_pairs(edges, 0.25, 0.9)
+    s1 = r_metrics_edges_pairs(edges, 0.25, 0.9, edges_canonical=True)
     key = lambda r: (r["src"], r["dst"])  # noqa: E731
     assert {key(r): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
             for r in s0.collect()} == {
         key(r): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
         for r in s1.collect()
     }
+    m0 = candidate_common_members(edges, edges)
+    m1 = candidate_common_members(edges, edges, edges_canonical=True)
     assert {(r["src"], r["dst"], r["member"]) for r in m0.collect()} == {
         (r["src"], r["dst"], r["member"]) for r in m1.collect()
     }
@@ -114,7 +114,7 @@ def test_shortest_path_lengths(edges):
 
 
 def test_rmetrics(edges):
-    scored = r_metrics_edges(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
+    scored = r_metrics_edges_pairs(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
     rows = {(r["src"], r["dst"]): r for r in scored.collect()}
     e12 = rows[(1, 2)]
     assert e12["r11"] == pytest.approx(0.5)  # CN={3}, deg(1)=2
@@ -122,10 +122,15 @@ def test_rmetrics(edges):
     assert e12["keepit"] is True
     bridge = rows[(3, 4)]
     assert bridge["r11"] == 0.0 and bridge["r12"] == 0.0  # no lvl1 CN
-    assert sorted(bridge["common_neighbors"]) == [1, 2, 5, 6]  # lvl2 CN
     assert bridge["r21"] == pytest.approx(4 / 5)  # |CN|=4, |lvl2(3)|=5
     assert bridge["r22"] == pytest.approx(4 / 5)
     assert bridge["keepit"] is False  # 0.8 < 0.9 threshold
+    cand = scored.filter(~F.col("keepit")).select("src", "dst")
+    members = candidate_common_members(edges, cand).collect()
+    # the bridge is the sole candidate; its lvl2 CN
+    assert sorted((r["src"], r["dst"], r["member"]) for r in members) == [
+        (3, 4, m) for m in (1, 2, 5, 6)
+    ]
 
 
 def test_betweenness_fractional(edges):
@@ -402,12 +407,15 @@ def test_ml_pipeline_cosine_equals_closed_form(spark):
 
 
 def test_hybrid_edge_weights(edges, vertices):
-    scored = r_metrics_edges(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
+    scored = r_metrics_edges_pairs(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
+    cand = scored.filter(~F.col("keepit")).select("src", "dst")
     sims = one_hot_cosine_similarities(edges, vertices, ["attr"])
     sims = sims.union(
         sims.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "similarity")
     )
-    w = hybrid_edge_weights(scored, sims, feature_min_avg=0.6).collect()
+    w = hybrid_edge_weights(
+        candidate_common_members(edges, cand), sims, feature_min_avg=0.6
+    ).collect()
     # Only candidate is the bridge (3,4); CN={1,2,5,6}; sim edges fully
     # inside: (1,2) sim 1.0 and (5,6) sim 1.0 → weight 2/2 = 1.0.
     assert len(w) == 1
@@ -432,121 +440,27 @@ def test_hgn_loop_splits_triangles(edges, vertices):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
 
 
-def test_rmetrics_pair_form_equals_array_form(spark):
-    """r13 delete-rule dial (VERDICT r12 #3): the pair-form r-metrics
-    (flat (id, nb) equi-joins — the DuckDB oracle's own formulation)
-    must be BIT-identical to the array form on the real derived graph:
-    same edges, same four ratios, same keepit. Integer counts divided
-    by integer counts leave no rounding surface."""
-    from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from hgn_spark.graph.rmetrics import r_metrics_edges, r_metrics_edges_pairs
-    from tests.conftest import SF_SMOKE
-
-    e = derived_edges(spark, SF_SMOKE)
-    arr = {
-        (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in r_metrics_edges(e, R1_THRES, R2_THRES).collect()
-    }
-    scored, members2 = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
-    pair = {
-        (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in scored.collect()
-    }
-    assert arr == pair
-    # and the member rows equal the array path's exploded sets
-    want_members = {
-        (r["src"], r["dst"], m)
-        for r in r_metrics_edges(e, R1_THRES, R2_THRES).collect()
-        for m in r["common_neighbors"]
-    }
-    got_members = {
-        (r["src"], r["dst"], r["member"]) for r in members2.collect()
-    }
-    assert got_members == want_members
-
-
-def test_candidate_common_members_matches_full(edges):
-    """The loop-shaped candidate-only member expansion equals the full
-    member frame filtered to keepit=False edges — the restriction the
-    r13 sub-phase attribution justified (weights only ever consume
-    candidate members). On the fixture the bridge (3,4) is the sole
-    candidate at these thresholds, with level-2 common members
-    {1,2,5,6}."""
-    from hgn_spark.graph.rmetrics import (
-        candidate_common_members,
-        r_metrics_edges_pairs,
-    )
-    from pyspark.sql import functions as F
-
-    scored, members_all = r_metrics_edges_pairs(edges, 0.25, 0.9)
-    cand = scored.filter(~F.col("keepit")).select("src", "dst")
-    want = {
-        (r["src"], r["dst"], r["member"])
-        for r in members_all.join(cand, ["src", "dst"], "left_semi").collect()
-    }
-    got = {
-        (r["src"], r["dst"], r["member"])
-        for r in candidate_common_members(edges, cand).collect()
-    }
-    assert got == want
-    assert got == {(3, 4, m) for m in (1, 2, 5, 6)}
-
-
-def test_hgn_pairs_impl_equals_arrays_impl(edges, vertices):
-    """The full HGN loop under both delete-rule formulations lands on
-    identical communities (the registered row runs 'pairs' since r13;
-    'arrays' stays the evidence twin)."""
-    params_base = dict(
-        r_lvl1_thres=0.25,
-        r_lvl2_thres=0.9,
-        max_edge_weight=0.9,
-        betweenness_thres=5.0,
-        feature_min_avg=0.6,
-        max_steps=5,
-    )
-    got_pairs = _as_dict(
-        hgn_communities(
-            vertices, edges, ["attr"], HGNParams(**params_base)
-        ),
-        "id",
-        "component",
-    )
-    got_arrays = _as_dict(
-        hgn_communities(
-            vertices,
-            edges,
-            ["attr"],
-            HGNParams(delete_rule_impl="arrays", **params_base),
-        ),
-        "id",
-        "component",
-    )
-    assert got_pairs == got_arrays == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
-
-
-def test_hgn_incremental_impl_equals_full(edges, vertices):
-    """pairs_incremental — steps 2+ score only the affected edge set —
-    must land on identical communities to the full per-step recompute
-    (the soundness argument lives on HGNParams.delete_rule_impl)."""
-    base = dict(
-        r_lvl1_thres=0.25,
-        r_lvl2_thres=0.9,
-        max_edge_weight=0.9,
-        betweenness_thres=5.0,
-        feature_min_avg=0.6,
-        max_steps=5,
-    )
-    inc = _as_dict(
-        hgn_communities(
-            vertices,
-            edges,
-            ["attr"],
-            HGNParams(delete_rule_impl="pairs_incremental", **base),
-        ),
-        "id",
-        "component",
-    )
-    assert inc == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
+def test_candidate_common_members_matches_full(spark, edges):
+    """The candidate-only member expansion, with and without the
+    source restriction, equals the level-2 common-neighbor sets
+    computed from `neighbors(level=2)`: members of N2(src) ∩ N2(dst)
+    other than src and dst. Checked for every edge as a candidate and
+    for a two-edge subset; the bridge (3,4) has {1,2,5,6}."""
+    nb2 = {r["id"]: set(r["neighbors"]) for r in neighbors(edges, level=2).collect()}
+    for cand_edges in (EDGES, [(1, 2), (3, 4)]):
+        cand = spark.createDataFrame(cand_edges, "src long, dst long")
+        want = {
+            (s, d, m) for s, d in cand_edges for m in (nb2[s] & nb2[d]) - {s, d}
+        }
+        assert {m for s, d, m in want if (s, d) == (3, 4)} == {1, 2, 5, 6}
+        for restrict in (True, False):
+            got = {
+                (r["src"], r["dst"], r["member"])
+                for r in candidate_common_members(
+                    edges, cand, restrict_sources=restrict
+                ).collect()
+            }
+            assert got == want
 
 
 def test_triangles_and_clustering(edges):
@@ -961,60 +875,6 @@ def test_loop_final_generations_parked(spark):
     )
     assert parked, "connected_components must park its star-forest blocks"
     clear_session_caches()
-
-
-def test_rmetrics_scoped_equals_full_filtered(spark):
-    """ADVICE r13 #3: direct row-for-row pin of the scope contract —
-    r_metrics_edges_pairs(scope=subset) must equal the unscoped call
-    filtered to the same edges (all four ratios + keepit), on the real
-    derived graph with an arbitrary scope subset. Previously only
-    covered transitively via end-to-end community equality, which
-    could mask a scoped-scoring bug that happens not to change final
-    components."""
-    from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
-    from tests.conftest import SF_SMOKE
-
-    e = derived_edges(spark, SF_SMOKE)
-    # arbitrary, deterministic, non-trivial subset (~1/3 of edges)
-    scope = e.filter((F.col("src") + F.col("dst")) % 3 == 0)
-    assert 0 < scope.count() < e.count()
-
-    full_scored, full_members = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
-    scoped_scored, scoped_members = r_metrics_edges_pairs(
-        e, R1_THRES, R2_THRES, scope=scope
-    )
-    keys = {(r["src"], r["dst"]) for r in scope.collect()}
-    want = {
-        (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in full_scored.collect()
-        if (r["src"], r["dst"]) in keys
-    }
-    got = {
-        (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in scoped_scored.collect()
-    }
-    assert got == want and set(got) == keys
-    # the member rows obey the same contract
-    want_m = {
-        (r["src"], r["dst"], r["member"])
-        for r in full_members.collect()
-        if (r["src"], r["dst"]) in keys
-    }
-    got_m = {
-        (r["src"], r["dst"], r["member"]) for r in scoped_members.collect()
-    }
-    assert got_m == want_m
-
-
-def test_hgn_params_rejects_unknown_impl():
-    """ADVICE r13 #1: a typo'd delete_rule_impl must fail at
-    construction, not silently fall through to the legacy arrays
-    path."""
-    with pytest.raises(ValueError, match="pair_incremental"):
-        HGNParams(delete_rule_impl="pair_incremental")
-    for ok in ("arrays", "pairs", "pairs_incremental"):
-        assert HGNParams(delete_rule_impl=ok).delete_rule_impl == ok
 
 
 def test_betweenness_auto_approx_dispatch(edges):

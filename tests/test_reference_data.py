@@ -276,44 +276,6 @@ def test_quakers_betweenness_matches_python_reference(quakers, compat):
         assert abs(got[e] - v) < 1e-9, (e, got[e], v)
 
 
-def test_quakers_hgn_incremental_equals_full(quakers):
-    """pairs_incremental vs the full per-step recompute over THREE
-    real deletion rounds on the Quakers network (quakers.yml options)
-    — identical community assignment, and both runs actually iterate
-    (n_steps >= 2), so the step-2+ scoped scoring is exercised on a
-    genuine deletion cascade, not a converged no-op."""
-    nodes, edges = quakers
-    base = dict(
-        r_lvl1_thres=0.50,
-        r_lvl2_thres=0.85,
-        max_edge_weight=0.50,
-        betweenness_thres=10.0,
-        feature_min_avg=0.33,
-        max_steps=3,
-        max_sp_length=2,
-    )
-    t_full: dict = {}
-    full = sorted(
-        (r["id"], r["component"])
-        for r in hgn_communities(
-            nodes, edges, ["Gender"], HGNParams(**base), phase_timings=t_full
-        ).collect()
-    )
-    t_inc: dict = {}
-    inc = sorted(
-        (r["id"], r["component"])
-        for r in hgn_communities(
-            nodes,
-            edges,
-            ["Gender"],
-            HGNParams(delete_rule_impl="pairs_incremental", **base),
-            phase_timings=t_inc,
-        ).collect()
-    )
-    assert inc == full
-    assert t_full.get("n_steps", 0) >= 2 and t_inc.get("n_steps", 0) >= 2
-
-
 def test_quakers_hgn_end_to_end(quakers):
     nodes, edges = quakers
     params = HGNParams(
