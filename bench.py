@@ -328,11 +328,10 @@ def main() -> None:
     # unambiguous story per query for consumers of the JSON.
     errors = {n: m for n, m in pass_errors.items() if n not in timings}
 
-    # Per-branch wall times for the multi-branch evidence rows
-    # (VERDICT r12 #7): the headline rows keep widening with labeled
-    # evidence branches (simsearch carries 7 ANN pipelines, minhash 7
-    # sketches), so the headline total creeps with EVIDENCE weight.
-    # Time each branch's own drain once, after the timed passes, in a
+    # Per-branch wall times for the multi-branch rows of
+    # hgn_spark.branches.BRANCH_ROLES: a row's headline time mixes its
+    # ground-truth yardsticks with its production branches, so time
+    # each branch's own drain once, after the timed passes, in a
     # non-headline field — filtering the unioned row on its branch
     # literal folds every other arm to an empty relation (constant
     # folding + PropagateEmptyRelation), so each drain executes that

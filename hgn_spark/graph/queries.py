@@ -61,19 +61,19 @@ assert _GRAPH_CTE_MAT.count("MATERIALIZED") == 2
 # from the same lineitem self-join, and its output is tiny relative to
 # the scan (2.8k edges at sf0.1) — materialize once per session, the
 # same engine-caching discipline as the dedup family's shingle sets.
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
+_EDGES_CACHE: dict[tuple, DataFrame] = {}
 # Persistent-RDD ids behind the cached checkpoint (released by
 # registry.clear_session_caches).
-_CACHE_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
+_CACHE_BLOCK_IDS: dict[tuple, set[int]] = {}
 
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
+from hgn_spark.registry import _table_cache_key, register_cache as _register_cache  # noqa: E402
 
 _register_cache("graph_edges", _EDGES_CACHE, block_ids=_CACHE_BLOCK_IDS)
 
 
 def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same graph in Spark: one lineitem self-join on the part key."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _table_cache_key(spark, sf_dir, "lineitem")
     cached = _EDGES_CACHE.get(key)
     if cached is not None:
         return cached

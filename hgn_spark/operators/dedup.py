@@ -2,22 +2,23 @@
 
 Engine extension family for training-data pipelines. Every candidate
 generator is BUCKETED — pairs are only formed inside a bucket (shared
-shingle, shared LSH band, shared simhash chunk, shared SRP band), never
+shingle, shared LSH band, shared simhash key, shared SRP band), never
 by an all-pairs cross join; that is the property that survives a 100×
-scale-up (VERDICT r1 demanded it explicitly).
+scale-up.
 
 - exact: bag-of-words fingerprint groups (hash-groupBy).
 - n-gram jaccard: shared-shingle inverted-index join → exact verify.
   Fully SQL-expressible → hash-checked oracle.
-- minhash LSH: 16 permutation minima over portable 48-bit shingle
-  hashes → 4 bands × 4 rows → band-bucket join → exact jaccard verify.
-  Hash-checked (the md5-derived constants inline into the oracle);
-  recall/candidate-count additionally asserted in tests/test_llm_ops.py.
-- simhash: 48-bit signatures, pigeonhole bucketing on 12-bit chunks
-  (hamming ≤ 3 ⇒ at least one of 4 chunks equal), bit_count verify.
-  Hash-checked.
+- minhash LSH: permutation minima over portable 48-bit shingle hashes,
+  sized for recall by `minhash_recall_perms` (24 perms / 6 bands of 4
+  rows) → band-bucket join → exact jaccard verify. Hash-checked (the
+  md5-derived constants inline into the oracle); recall and
+  candidate-count additionally asserted in tests/test_llm_ops.py.
+- simhash: 48-bit signatures keyed on every 3-of-6 8-bit chunk
+  combination (hamming ≤ 3 ⇒ some combination matches exactly),
+  bit_count verify. Hash-checked.
 - embedding near-dup: signed-random-projection LSH over array<float>,
-  exact cosine verify.
+  sized for recall by `srp_recall_bands`, exact cosine verify.
 - semantic (SemDeDup-style): ceil(sqrt(n)) broadcast centroids →
   argmax cluster assignment → within-cluster any-earlier-neighbor
   drop rule; assignment and verify balance at O(n^1.5). Hash-checked.
@@ -45,7 +46,7 @@ from hgn_spark.registry import register
 
 JACCARD_THRES = 0.8
 # Pinned document-frequency cap for the jaccard driver row's `cap`
-# branch (VERDICT r8 #1): at 100 TB the df-capped candidate path IS
+# branch: at 100 TB the df-capped candidate path IS
 # the production path (boilerplate mega-buckets are the norm), so it
 # carries driver-grade evidence, not just containment tests. The value
 # is chosen so the capped pair set provably DIFFERS from the uncapped
@@ -62,41 +63,31 @@ CAP_DF = 2
 # growth envelope of the cap guard is unchanged. A deployment tunes
 # this against its own boilerplate profile; the probe artifact carries
 # the sweep. Wired into executable code as `ngram_jaccard_pairs_auto`'s
-# default cap AND dispatch threshold (`choose_jaccard_path` — ADVICE
-# r11 #1), so the constant cannot silently drift from what ships.
+# default cap AND dispatch threshold (`choose_jaccard_path`), so the
+# constant cannot silently drift from what ships.
 PRODUCTION_CAP_DF = 16
 # Which doc_id residue (mod INC_BATCH_MOD) plays the "incoming batch"
 # in the incremental near-dup branches. One constant feeds the Spark
 # call sites, the oracle SQL, and the pytest split so they cannot
-# drift. Residue 0 (r10, was 4) was chosen so the CAPPED incremental
-# branch is non-vacuous at sf0.01: vs_corpus has 14 pairs and
-# vs_corpus_cap 13 — the cap provably gates the batch-vs-corpus
-# candidate join, which is the actual 100 TB ingestion path
-# (VERDICT r9 #1).
+# drift. Residue 0 was chosen so the CAPPED incremental branch is
+# non-vacuous at sf0.01: vs_corpus has 14 pairs and vs_corpus_cap 13 —
+# the cap provably gates the batch-vs-corpus candidate join, which is
+# the actual 100 TB ingestion path.
 INC_BATCH_MOD = 5
 INC_BATCH_REM = 0
-NUM_PERM = 16
-BANDS = 4  # 4 rows per band
 SIMHASH_MAX_HAMMING = 3
-# Pinned chunk-bucket cap for the sketch row's `simhash_cap` branch
-# (r10): the 100x probe measured the fixed 4 x 2^12 chunk space going
-# superlinear (42.7x growth at 100x data); dropping buckets hotter
-# than the cap bounds candidate generation. Chosen, like CAP_DF, so
-# the capped pair set provably DIFFERS from the uncapped one at
-# sf0.01 (13 pairs vs 17) without being empty.
-SIMHASH_CAP = 2
 # Manku-style combination bucketing ("Detecting Near-Duplicates for Web
 # Crawling", WWW'07 §3): split the 48-bit signature into 6 chunks of
 # 8 bits and key candidate buckets on every 3-chunk combination —
 # C(6,3) = 20 tables of 24-bit keys. Pigeonhole: hamming <= 3 touches
 # at most 3 chunks, so at least 3 chunks are clean and SOME 3-subset
-# of clean chunks matches — candidates remain a superset of every true
-# pair, so the verified result is IDENTICAL to the 4 x 12-bit chunk
-# scheme (recall 1.0 by construction, pinned in tests and
-# PROBE_recall_r11). What changes is the bucket space: 2^24 per table
-# vs 2^12, deferring the occupancy blowup (42.7x growth at 100x for
-# the 12-bit chunks) by a factor of 4096 while scanning only
-# 20n / 4n = 5x more key rows.
+# of clean chunks matches — candidates are a superset of every true
+# pair, so the verified result is every pair within the hamming bound
+# (recall 1.0 by construction, pinned in tests and PROBE_recall_r11).
+# A single 12-bit chunk key (4 tables) gives the same verified pairs
+# from a 2^12 bucket space whose occupancy grows with n (42.7x at 100x
+# data, PROBE_100x_heavy_r10); the 2^24 keys defer that by 4096x for
+# 5x the key rows.
 SIMHASH_COMBO_CHUNKS = 6
 SIMHASH_COMBO_PICK = SIMHASH_COMBO_CHUNKS - SIMHASH_MAX_HAMMING  # = 3
 EMB_COS_THRES = 0.4  # testdata has no planted embedding dups (max pair
@@ -109,13 +100,6 @@ EMB_COS_THRES = 0.4  # testdata has no planted embedding dups (max pair
 # it to 0.96/0.89 (0.95-stratum 1.0/0.94) at equal wall clock, so 2
 # is the production default, replayed by the oracle.
 SEMANTIC_MULTI_ASSIGN = 2
-SRP_BITS = 16
-# Ceiling for the adaptive-bits SRP variant: enough for n = 2^16
-# vectors per the 2*log2(n) occupancy rule; the signature still packs
-# into one BIGINT band pair. The ADAPTIVE bit count (not this cap) is
-# what holds bucket occupancy constant as the corpus grows — the
-# driver row hash-checks it as the `srp_adaptive` branch.
-SRP_MAX_BITS = 32
 # Embedding dimensionality shared by the Spark pipeline and the DuckDB
 # oracle (both inline the same md5-derived hyperplanes). The testdata
 # guarantee is pinned by tests/test_llm_ops.py::test_embedding_dim_matches
@@ -154,14 +138,12 @@ EMB_DIM = 64
 _MINHASH_P = (1 << 31) - 1
 
 
-def _minhash_consts(n: int = NUM_PERM) -> list[tuple[int, int]]:
+def _minhash_consts(n: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) per permutation from md5 — no RNG; a in
     [1, p-1], b in [0, p-1] over the full GF(2^31-1) field (see
     _MINHASH_P: full-range multipliers are what make the permutation
-    minima independent across bands). The first NUM_PERM entries are
-    the pinned production sketch's; a recall-sized sketch
-    (``minhash_recall_perms``) extends the SAME md5 sequence, so its
-    first 16 permutations coincide with the pinned ones."""
+    minima independent across bands). Entry p depends on p alone, so
+    a larger sketch extends a smaller one's permutation sequence."""
     out = []
     for p in range(n):
         da = hashlib.md5(f"minhash:a:{p}".encode()).digest()
@@ -171,8 +153,6 @@ def _minhash_consts(n: int = NUM_PERM) -> list[tuple[int, int]]:
         out.append((a, b))
     return out
 
-
-_PERM_CONSTS = _minhash_consts()
 
 # Permutation budget for minhash_recall_perms — the analogue of
 # SRP_MAX_BANDS: an explicit signature-cost ceiling (num_perm array
@@ -189,28 +169,24 @@ def minhash_recall_perms(
     max_perms: int = MINHASH_MAX_PERMS,
 ) -> tuple[int, int]:
     """(num_perm, bands) for a RECALL-TARGETED MinHash-LSH sizing —
-    the `srp_recall_bands` treatment applied to the one production
-    sketch that still shipped pinned dials (VERDICT r13 what's-wrong
-    #1: the 16-perm/4-band sketch's own S-curve gives only
-    1-(1-0.8^4)^4 ≈ 0.875 at the JACCARD_THRES=0.8 it filters by, and
+    the `srp_recall_bands` treatment for set resemblance. A pinned
+    16-perm/4-band sketch's own S-curve gives only 1-(1-0.8^4)^4 ≈
+    0.875 at the JACCARD_THRES=0.8 it filters by, and
     PROBE_text_clustered_r13 measured 0.83-0.86 in the J>=0.8 stratum
-    — ~1 in 7 true threshold pairs never became candidates).
+    — ~1 in 7 true threshold pairs never became candidates.
 
     Classic banded-minhash amplification, solved for the band count:
     a pair at jaccard J collides in one band of r rows with
     probability J^r, so b = ceil(ln(1-R) / ln(1-J^r)) independent
     bands catch it with probability >= R at the design point. Unlike
     SRP, nothing here depends on n — banded set-resemblance collision
-    is corpus-size-independent (the r13 probe measured the pinned
+    is corpus-size-independent (the r13 probe measured a pinned
     sketch's recall FLAT across 6k/20k, just flat at the wrong
     value) — so the sizing is a pure function of (J, R, r).
 
-    ``rows_per_band`` stays the pinned sketch's r=4: it sets the
-    S-curve steepness (false-candidate rate at background jaccard j
-    is ~b*j^r; at r=4, b=6 an unrelated j=0.3 pair costs 4.9%
-    candidate probability vs 12.7% at r=3), and keeping it fixed
-    means the sized sketch extends the SAME permutation sequence —
-    the first 16 minima are bit-identical to the pinned sketch's.
+    ``rows_per_band`` = 4 sets the S-curve steepness (false-candidate
+    rate at background jaccard j is ~b*j^r; at r=4, b=6 an unrelated
+    j=0.3 pair costs 4.9% candidate probability vs 12.7% at r=3).
 
     Defaults (J=0.8, R=0.95, r=4) solve to (24, 6): expected recall
     1-(1-0.8^4)^6 ≈ 0.958 at the threshold itself, higher above it.
@@ -285,18 +261,20 @@ def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tokenize→shingle→hash pass, so a driver/bench session running several
 # of them pays for it once. localCheckpoint keeps the lineage cut and
 # the data executor-local; the dict only holds DataFrame handles.
-_DOC_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_DOC_SETS_CACHE: dict[tuple, DataFrame] = {}
 # Verified near-dup pairs per (session, sf_dir): the jaccard query's
 # output is both a driver query and canonical-groups' edge input.
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_NGRAM_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 # Persistent-RDD ids behind the cached checkpoints, so
 # registry.clear_session_caches can free the blocks deterministically
 # instead of leaving them to async GC cleanup.
-_CACHE_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
+_CACHE_BLOCK_IDS: dict[tuple, set[int]] = {}
 
 # Structural registration (instead of registry reaching into private
 # module state): clear_session_caches drops whatever is registered.
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
+# Keys come from registry._table_cache_key, which fingerprints the
+# documents files so a rewritten table never hits a stale entry.
+from hgn_spark.registry import _table_cache_key, register_cache as _register_cache  # noqa: E402
 
 _register_cache(
     "dedup", _DOC_SETS_CACHE, _NGRAM_PAIRS_CACHE, block_ids=_CACHE_BLOCK_IDS
@@ -316,7 +294,7 @@ def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exact-verify step, and the md5 derivation is what lets the
     DuckDB oracles replay every sketch bit-for-bit.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _table_cache_key(spark, sf_dir, "documents")
     cached = _DOC_SETS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -403,7 +381,7 @@ def _verified_jaccard(cands: DataFrame, sets_: DataFrame) -> DataFrame:
     shingle-set table: two doc-level equi-joins (one row per doc, AQE
     broadcasts the pruned candidate side) and an array_intersect — no
     join against the full inverted index, whose two extra shuffles were
-    the dominant cost of the LSH queries (VERDICT r3 #2). Every
+    the dominant cost of the LSH queries. Every
     non-join column of ``cands`` (e.g. a branch label) passes through,
     so callers never need to re-join the candidate subtree — Catalyst
     shares no subplans, and a label rejoin re-executed the whole
@@ -625,7 +603,7 @@ def append_batch_to_standing_index(
     batch_mod: int = INC_BATCH_MOD,
     batch_rem: int = INC_BATCH_REM,
 ) -> None:
-    """Epoch append (VERDICT r10 #7): after a feed has been deduped and
+    """Epoch append: after a feed has been deduped and
     ACCEPTED into the corpus, fold its shingles into the standing
     bucketed index so the NEXT feed's candidate join sees it — the
     feed-after-feed ingestion loop a 100 TB corpus actually runs.
@@ -708,7 +686,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting handles the bucket join; for corpora with mega-buckets
     use `ngram_jaccard_pairs_capped` (df-capped candidates, exact
     verify)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _table_cache_key(spark, sf_dir, "documents")
     cached = _NGRAM_PAIRS_CACHE.get(key)
     if cached is not None:
         return cached
@@ -752,8 +730,8 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard_pairs",
     # Whole-corpus pairs AND the incremental batch-vs-corpus shape as
-    # labeled `op` branches of one driver row (the r8 evidence upgrade
-    # — VERDICT r7 #4). The incremental branches replay from the SAME
+    # labeled `op` branches of one driver row, so the driver hash covers
+    # the ingestion shape too. The incremental branches replay from the SAME
     # jpairs fragment: a thresholded pair with at least one batch
     # endpoint (doc_id % 5 == 4) is exactly what the batch-vs-index
     # join surfaces — candidates need a shared shingle on both paths,
@@ -762,7 +740,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # test_neardup_incremental_matches_full_pair_split). `vs_corpus`
     # reports the batch doc as d1 (the one to drop before ingestion),
     # so the CASE re-orients jpairs' d1 < d2 canonical order.
-    # The `cap` branch (r9, VERDICT r8 #1) replays the df-capped
+    # The `cap` branch replays the df-capped
     # candidate path: a capped pair is a thresholded pair that still
     # shares at least one shingle NO hotter than CAP_DF docs
     # (candidates form only in surviving buckets; verify recomputes
@@ -823,7 +801,7 @@ def dedup_ngram_jaccard_pairs_query(spark: SparkSession, sf_dir: str) -> DataFra
       verify. At sf0.01 it returns FEWER pairs than 'all' (23 vs 25),
       so the branch proves the cap actually gates candidates rather
       than vacuously reproducing the uncapped result;
-    - 'vs_corpus_cap' / 'in_batch_cap' (r10, VERDICT r9 #1): the
+    - 'vs_corpus_cap' / 'in_batch_cap': the
       CAPPED incremental composition — df-capped candidate generation
       against the standing index, the shape a 100 TB ingestion
       pipeline actually runs (boilerplate mega-buckets + daily feeds).
@@ -874,7 +852,7 @@ def ngram_jaccard_pairs_capped(
 
 
 def choose_jaccard_path(max_df: int, df_cap: int = PRODUCTION_CAP_DF) -> str:
-    """The capped-vs-exact dispatch rule (VERDICT r11 what's-wrong #2):
+    """The capped-vs-exact dispatch rule:
     'exact' when the observed max shingle document-frequency is at or
     under the cap, 'capped' otherwise.
 
@@ -899,14 +877,13 @@ def ngram_jaccard_pairs_auto(
     """Exact-jaccard near-dup pairs with PLAN-TIME dispatch between the
     uncapped exact candidate path and the df-capped guard
     (`choose_jaccard_path`) — the production entry point that wires
-    PRODUCTION_CAP_DF into executable code (ADVICE r11 #1: the
-    constant was doc-only; now it is both this function's default cap
-    and the dispatch threshold).
+    PRODUCTION_CAP_DF into executable code: the constant is both this
+    function's default cap and the dispatch threshold.
 
     The dispatch scalar is one aggregation over the standing shingle
     index — the same frame both candidate paths scan anyway (and the
     session-cached index at that), reduced to a 1-row max, the same
-    loop-control class as the adaptive sketches' count(). A deployment
+    loop-control class as the sized sketches' count(). A deployment
     maintaining a standing index would keep the df histogram as index
     metadata and skip even that pass."""
     max_df = (
@@ -990,31 +967,31 @@ def canonical_groups(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _perm_min(p: int, consts: list[tuple[int, int]] | None = None):
-    """min over hs of the p-th permutation hash — the universal-family
-    mix ((h mod p)*a + b) mod p over GF(2^31-1) with md5-derived
-    full-range (a, b) (see _MINHASH_P for why the field shrank in
-    r14: the old small-multiplier 2^61-1 mix correlated minima across
-    bands), exact in signed 64-bit in Spark AND DuckDB (product
-    < 2^62). A named closure, not an inline `lambda h, p=p: ...` —
-    PySpark infers higher-order-function arity from the lambda
-    signature, so a default arg turns the lambda binary and binds `p`
-    to the ARRAY INDEX instead of the permutation."""
-    a, b = (consts if consts is not None else _PERM_CONSTS)[p]
-    return F.array_min(
-        F.transform(
-            "hs",
-            lambda h: ((h % F.lit(_MINHASH_P)) * F.lit(a) + F.lit(b))
-            % F.lit(_MINHASH_P),
-        )
+def _minhash_signature(consts: list[tuple[int, int]]) -> Column:
+    """``array<long>`` of per-permutation minima over the per-doc hash
+    array ``hs``: the universal-family mix ((h mod p)*a + b) mod p over
+    GF(2^31-1) for each md5-derived (a, b) in ``consts`` (see
+    _MINHASH_P), exact in signed 64-bit in Spark AND DuckDB (product
+    < 2^62).
+
+    One array expression iterating a consts literal: one parse and a
+    tiny analyzed expression instead of one Column tree per
+    permutation (the `_srp_bits_array` treatment). Spark's bracket
+    indexing c[0] is 0-based, unlike element_at."""
+    consts_sql = "array(" + ",".join(f"array({a}L,{b}L)" for a, b in consts) + ")"
+    return F.expr(
+        f"transform({consts_sql}, c -> array_min(transform(hs, "
+        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
     )
 
 
-def _minhash_oracle(num_perm: int = NUM_PERM, bands: int = BANDS) -> str:
-    """DuckDB replay of the full MinHash-LSH pipeline: same 48-bit
-    shingle hashes, same (a, b) permutation mixes, same banding
-    (default the pinned 4×4; the recall-sized branch replays its own
-    (num_perm, bands)), same exact-jaccard verify."""
+def _minhash_oracle() -> str:
+    """DuckDB replay of the full MinHash-LSH pipeline at the
+    `minhash_recall_perms` sizing: same 48-bit shingle hashes, same
+    (a, b) permutation mixes, same banding, same exact-jaccard verify.
+    The sizing is a pure function of (J, R, r), so inlining its result
+    keeps the oracle integer-exact with no libm hazard."""
+    num_perm, bands = minhash_recall_perms()
     consts = _minhash_consts(num_perm)
     rows_per_band = num_perm // bands
     mins = ", ".join(
@@ -1052,57 +1029,33 @@ def _minhash_oracle(num_perm: int = NUM_PERM, bands: int = BANDS) -> str:
     """
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    num_perm: int = NUM_PERM,
-    bands: int = BANDS,
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs: ``num_perm`` permutation minima per
-    doc over the portable 48-bit shingle hashes, banded into ``bands``
-    bands; only docs sharing a (band, band-key) bucket become
-    candidates; exact jaccard verify at JACCARD_THRES (0.8).
-
-    Defaults are the pinned 16-perm/4-band sketch (the driver row's
-    `minhash` branch — at jaccard 0.89 it catches a pair with
-    p = 1-(1-0.89^4)^4 ≈ 0.99, but only ~0.875 at the 0.8 threshold
-    itself); the production sizing is `minhash_recall_perms`, wired
-    as the row's `minhash_recall` branch. Hash-checked: the
-    md5-derived permutation constants inline into the DuckDB oracle,
-    which replays the exact sketch (recall/candidate-count properties
-    additionally asserted in tests/test_llm_ops.py).
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup pairs at the `minhash_recall_perms` sizing
+    (24 permutation minima per doc over the portable 48-bit shingle
+    hashes, banded into 6 bands of 4 rows — expected recall 0.958 at
+    the JACCARD_THRES=0.8 threshold itself, higher above it); only
+    docs sharing a (band, band-key) bucket become candidates; exact
+    jaccard verify at JACCARD_THRES. Hash-checked: the md5-derived
+    permutation constants inline into the DuckDB oracle, which replays
+    the exact sketch (recall/candidate-count properties additionally
+    asserted in tests/test_llm_ops.py).
     """
-    consts = _minhash_consts(num_perm) if num_perm != NUM_PERM else _PERM_CONSTS
+    num_perm, bands = minhash_recall_perms()
     sets_ = _doc_shingle_sets(spark, sf_dir)
     # Per-permutation min as an array fold over the MATERIALIZED per-doc
-    # hash array: zero shuffles for the signature build. (When the 16
+    # hash array: zero shuffles for the signature build. (When the
     # branches read the raw text pipeline instead, CollapseProject
     # inlines tokenization into every branch — measured 6× slower than
     # a groupBy(min); reading the checkpointed `hs` removes the hazard,
     # and beats the groupBy because nothing shuffles at all.)
-    #
-    # r14: all minima in ONE array expression iterating a (a, b)
-    # consts literal — the same `_srp_bits_array` treatment (one parse
-    # + tiny analysis instead of one Column tree per permutation); the
-    # per-permutation mix inside the lambda is the identical
-    # ((h % p) * a + b) % p fold `_perm_min` evaluates, so every
-    # minimum and band key is unchanged. (NB Spark's bracket indexing
-    # c[0] is 0-based, unlike element_at.)
-    consts_sql = "array(" + ",".join(
-        f"array({a}L,{b}L)" for a, b in consts[:num_perm]
-    ) + ")"
-    mh_col = F.expr(
-        f"transform({consts_sql}, c -> array_min(transform(hs, "
-        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
+    sig = sets_.filter(F.col("sz") > 0).select(
+        "doc_id", _minhash_signature(_minhash_consts(num_perm)).alias("mh")
     )
-    sig = sets_.filter(F.col("sz") > 0).select("doc_id", mh_col.alias("mh"))
     rows_per_band = num_perm // bands
     # Band key = the minima tuple itself (joined as a string — the same
     # key the oracle builds); hashing the tuple again would just add an
-    # engine-specific hash for zero bucketing benefit. array_join over
-    # CAST(x AS STRING) elements == the historical concat_ws over the
-    # bigint columns (concat_ws string-casts its args; no nulls here —
-    # hs is non-empty after the sz > 0 filter).
+    # engine-specific hash for zero bucketing benefit. No nulls here —
+    # hs is non-empty after the sz > 0 filter.
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1133,110 +1086,20 @@ def minhash_lsh_pairs(
     return _verified_jaccard(cands, sets_).filter(F.col("jaccard") >= JACCARD_THRES)
 
 
-def minhash_lsh_pairs_nested(
-    spark: SparkSession,
-    sf_dir: str,
-    inner: tuple[int, int] = (NUM_PERM, BANDS),
-    outer: tuple[int, int] | None = None,
-) -> DataFrame:
-    """BOTH MinHash configurations from ONE physical pipeline (VERDICT
-    r14 #3, guide §2.3/§2.4): the pinned (16-perm, 4-band) sketch and
-    the recall-sized (24-perm, 6-band) one share the md5 permutation
-    sequence AND the rows-per-band, so the pinned sketch's 4 bands are
-    bit-identical to the FIRST 4 of the recall sketch's 6. One 24-min
-    signature fold (was 16 + 24), one 6-band explode + self-join +
-    distinct (was 4-band + 6-band, each with its own join), one exact
-    verify (was two) — with the inner membership carried as a
-    ``bool_or(band < inner_bands)`` flag through the one aggregation
-    that replaced ``distinct()`` (same exchange, one extra 1-bit
-    column). Returns (d1, d2, jaccard, in_inner) where rows are
-    exactly `minhash_lsh_pairs(outer)`'s and ``in_inner`` marks
-    exactly `minhash_lsh_pairs(inner)`'s (pinned by test).
-
-    Requires the nesting property and asserts it loudly: same
-    rows-per-band, inner perms a prefix of outer perms (true by
-    construction of _minhash_consts + minhash_recall_perms's fixed
-    r=4; anything else is a sizing-change bug this should catch, not
-    mask).
-    """
-    if outer is None:
-        outer = minhash_recall_perms()
-    in_np, in_b = inner
-    out_np, out_b = outer
-    if (
-        in_np % in_b
-        or out_np % out_b
-        or in_np // in_b != out_np // out_b
-        or in_np > out_np
-        or in_b > out_b
-    ):
-        raise ValueError(
-            f"minhash_lsh_pairs_nested: inner {inner} is not a band-prefix "
-            f"of outer {outer} (rows-per-band must match, inner ⊆ outer)"
-        )
-    consts = _minhash_consts(out_np)
-    sets_ = _doc_shingle_sets(spark, sf_dir)
-    consts_sql = "array(" + ",".join(
-        f"array({a}L,{b}L)" for a, b in consts
-    ) + ")"
-    mh_col = F.expr(
-        f"transform({consts_sql}, c -> array_min(transform(hs, "
-        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
-    )
-    sig = sets_.filter(F.col("sz") > 0).select("doc_id", mh_col.alias("mh"))
-    rows_per_band = out_np // out_b
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(
-                f"array_join(transform(slice(mh, {b * rows_per_band + 1}, "
-                f"{rows_per_band}), x -> CAST(x AS STRING)), ':')"
-            ).alias("bh"),
-        )
-        for b in range(out_b)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    left = banded.select(F.col("doc_id").alias("d1"), "band", "bh")
-    right = banded.select(
-        F.col("doc_id").alias("d2"), F.col("band").alias("band2"), F.col("bh").alias("bh2")
-    )
-    cands = (
-        left.join(
-            right,
-            (F.col("band") == F.col("band2"))
-            & (F.col("bh") == F.col("bh2"))
-            & (F.col("d1") < F.col("d2")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.max(F.col("band") < in_b).alias("in_inner"))
-    )
-    return _verified_jaccard(cands, sets_).filter(
-        F.col("jaccard") >= JACCARD_THRES
-    )
-
-
 SIMHASH_BITS = 48  # = the informative bits of the portable shingle hash
-SIMHASH_CHUNKS = 4  # 12-bit chunks; hamming ≤ 3 ⇒ ≥ 1 chunk untouched
+SIMHASH_CHUNKS = 4  # oracle keying: 12-bit chunks; hamming ≤ 3 ⇒ ≥ 1 chunk untouched
 
 
-def _simhash_oracle(bucket_cap: int | None = None) -> str:
+def _simhash_oracle() -> str:
     """DuckDB replay of the SimHash pipeline: same 48-bit shingle
-    hashes, same majority-vote lanes, same 4×12-bit pigeonhole
-    bucketing, same bit_count(xor) verify. With ``bucket_cap``,
-    candidate chunks are restricted to (chunk_idx, chunk) buckets
-    holding <= cap docs — the Spark bucket_cap guard replayed."""
+    hashes, same majority-vote lanes, same bit_count(xor) verify. The
+    replay keys candidates on the 4 x 12-bit chunks (4 tables instead
+    of 20, cheaper in DuckDB); both keyings' candidate sets are
+    supersets of every pair within SIMHASH_MAX_HAMMING by pigeonhole,
+    so the verified pairs are identical — the driver hash re-proves
+    that per sf."""
     chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
-    if bucket_cap is None:
-        cap_ctes, cand = "", "chunks"
-    else:
-        cap_ctes = f""",
-    skeep AS (SELECT chunk_idx, chunk FROM chunks
-              GROUP BY 1, 2 HAVING count(*) <= {bucket_cap}),
-    cch AS (SELECT c.* FROM chunks c SEMI JOIN skeep USING (chunk_idx, chunk))"""
-        cand = "cch"
     return f"""
     WITH {_DUCK_HASHED_SETS},
     sig AS (
@@ -1249,11 +1112,11 @@ def _simhash_oracle(bucket_cap: int | None = None) -> str:
     chunks AS (
       SELECT doc_id, sig, CAST(i AS INT) AS chunk_idx,
              (sig >> (CAST(i AS INT) * {chunk_bits})) & {mask} AS chunk
-      FROM sig, range(0, {SIMHASH_CHUNKS}) t(i)){cap_ctes},
+      FROM sig, range(0, {SIMHASH_CHUNKS}) t(i)),
     pairs AS (
       SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
              a.sig AS sig1, b.sig AS sig2
-      FROM {cand} a JOIN {cand} b
+      FROM chunks a JOIN chunks b
         ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk
        AND a.doc_id < b.doc_id)
     SELECT d1, d2, bit_count(xor(sig1, sig2)) AS hamming
@@ -1261,28 +1124,24 @@ def _simhash_oracle(bucket_cap: int | None = None) -> str:
     """
 
 
-def _simhash_pairs_multi(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: list[tuple[str, str, int | None]],
-) -> DataFrame:
-    """Run several simhash configurations — ``(label, scheme,
-    bucket_cap)`` with scheme in {'chunk', 'combo'} — as ONE fused
-    pipeline, per-label results identical to standalone
-    `dedup_simhash_pairs` calls (pinned in tests/test_llm_ops.py; the
-    `_srp_pairs_multi` contract, simhash edition).
+def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup pairs: 48-bit signature per doc (sign of the
+    per-bit ±1 sum over distinct portable shingle hashes), candidate
+    buckets keyed on every C(6,3) = 20 three-chunk combination of 8-bit
+    chunks (24-bit keys, Manku WWW'07 §3 — see SIMHASH_COMBO_CHUNKS),
+    then exact bit_count(xor) verify at SIMHASH_MAX_HAMMING. By
+    pigeonhole the candidates cover every pair within the bound, so
+    recall is 1.0 by construction. Hash-checked against the DuckDB
+    replay.
 
-    What the configs share: the 48-lane signature fold runs once and
-    is localCheckpoint'ed (it is the expensive scan-side step — 48
-    popcount filters over each doc's hash array — and the frame is
-    tiny: one BIGINT per doc); bucket rows carry a config label so
-    buckets never mix across configs; the self-join, distinct and
-    bit_count verify run once over the union of all arms. The chunk
-    and combo schemes read the SAME signatures, so fusing changes
-    physical cost only, never a pair set."""
+    Features are 3-gram shingles, not tokens: the synthetic corpus
+    shares one ~50-word vocabulary, so token SETS are near-identical
+    across unrelated docs and token-simhash collapses; shingle sets are
+    distinctive (measured: 8/28 planted pairs recovered with tokens vs
+    a clean separation with shingles)."""
+    from itertools import combinations
+
     sets_ = _doc_shingle_sets(spark, sf_dir)
-    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
-    mask = (1 << chunk_bits) - 1
     sig = sets_.filter(F.col("sz") > 0).select(
         "doc_id",
         F.expr(
@@ -1292,147 +1151,42 @@ def _simhash_pairs_multi(
             "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
         ).alias("sig"),
     )
-    if len(specs) > 1:
-        # Materialize the fold once for all arms (lazy: first arm pays).
-        sig = sig.localCheckpoint(eager=False)
-
-    chunk_explode = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {SIMHASH_CHUNKS - 1}), "
-                f"i -> shiftright(sig, i * {chunk_bits}) & {mask})"
+    cb = SIMHASH_BITS // SIMHASH_COMBO_CHUNKS
+    cmask = (1 << cb) - 1
+    key_exprs = [
+        F.expr(
+            " | ".join(
+                f"shiftleft(shiftright(sig, {c * cb}) & {cmask}, {pos * cb})"
+                for pos, c in enumerate(combo)
             )
-        ).alias("chunk_idx", "chunk"),
-    )
-
-    def _combo_explode():
-        from itertools import combinations
-
-        cb = SIMHASH_BITS // SIMHASH_COMBO_CHUNKS
-        cmask = (1 << cb) - 1
-        key_exprs = [
-            F.expr(
-                " | ".join(
-                    f"shiftleft(shiftright(sig, {c * cb}) & {cmask}, "
-                    f"{pos * cb})"
-                    for pos, c in enumerate(combo)
-                )
-            )
-            for combo in combinations(
-                range(SIMHASH_COMBO_CHUNKS), SIMHASH_COMBO_PICK
-            )
-        ]
-        return sig.select(
-            "doc_id",
-            "sig",
-            F.posexplode(F.array(*key_exprs)).alias("chunk_idx", "chunk"),
         )
-
-    arms = []
-    for label, scheme, bucket_cap in specs:
-        chunks = _combo_explode() if scheme == "combo" else chunk_explode
-        if bucket_cap is not None:
-            # Drop mega-buckets BEFORE the pair join: one tiny
-            # aggregation (one row per (chunk_idx, chunk) bucket)
-            # broadcast back, so the bound applies to candidate
-            # GENERATION (the SRP bucket_cap shape).
-            sizes = chunks.groupBy("chunk_idx", "chunk").agg(
-                F.count(F.lit(1)).alias("bsz")
-            )
-            chunks = chunks.join(
-                F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
-                ["chunk_idx", "chunk"],
-            ).drop("bsz")
-        arms.append(chunks.select(F.lit(label).alias("label"), "*"))
-    banded = arms[0]
-    for a in arms[1:]:
-        banded = banded.unionByName(a)
-    left = banded.select(
-        "label",
-        F.col("doc_id").alias("d1"),
-        F.col("sig").alias("sig1"),
-        "chunk_idx",
-        "chunk",
+        for combo in combinations(range(SIMHASH_COMBO_CHUNKS), SIMHASH_COMBO_PICK)
+    ]
+    keyed = sig.select(
+        "doc_id", "sig", F.posexplode(F.array(*key_exprs)).alias("key_idx", "key")
     )
-    right = banded.select(
-        F.col("label").alias("label2"),
+    left = keyed.select(
+        F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "key_idx", "key"
+    )
+    right = keyed.select(
         F.col("doc_id").alias("d2"),
         F.col("sig").alias("sig2"),
-        F.col("chunk_idx").alias("ci2"),
-        F.col("chunk").alias("c2"),
+        F.col("key_idx").alias("ki2"),
+        F.col("key").alias("k2"),
     )
     return (
         left.join(
             right,
-            (F.col("label") == F.col("label2"))
-            & (F.col("chunk_idx") == F.col("ci2"))
-            & (F.col("chunk") == F.col("c2"))
+            (F.col("key_idx") == F.col("ki2"))
+            & (F.col("key") == F.col("k2"))
             & (F.col("d1") < F.col("d2")),
         )
-        .select("label", "d1", "d2", "sig1", "sig2")
+        .select("d1", "d2", "sig1", "sig2")
         .distinct()
-        .withColumn(
-            "hamming", F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2")))
-        )
+        .withColumn("hamming", F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2"))))
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .select("label", "d1", "d2", "hamming")
+        .select("d1", "d2", "hamming")
     )
-
-
-def dedup_simhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket_cap: int | None = None,
-    scheme: str = "chunk",
-) -> DataFrame:
-    """SimHash near-dup pairs: 48-bit signature per doc (sign of the
-    per-bit ±1 sum over distinct portable shingle hashes), pigeonhole
-    bucketing — hamming ≤ 3 implies at least one of the 4 12-bit chunks
-    matches — then exact bit_count(xor) verify. Hash-checked: the
-    DuckDB oracle replays the identical lanes and chunks.
-
-    Scale ceiling, measured (r10 100x probe): the chunk space is FIXED
-    (4 x 2^12 buckets), so occupancy grows with n and candidates grow
-    ~4n^2/4096 — 42.7x growth at 100x data. ``bucket_cap`` is the
-    guard: (chunk_idx, chunk) buckets holding more than ``bucket_cap``
-    docs are dropped from candidate generation (the verify still
-    computes exact hamming for every surviving pair), the same
-    contract as the SRP sketch's bucket_cap and the jaccard df-cap —
-    bounded candidates with a stated recall caveat (a true pair whose
-    EVERY matching chunk is over-cap is missed; at hamming <= 3 a pair
-    matches in at least one of 4 chunks, so the cap must price in
-    boilerplate-heavy chunks being the common ones).
-
-    Features are 3-gram shingles, not tokens: the synthetic corpus
-    shares one ~50-word vocabulary, so token SETS are near-identical
-    across unrelated docs and token-simhash collapses; shingle sets are
-    distinctive (measured: 8/28 planted pairs recovered with tokens vs
-    a clean separation with shingles).
-
-    ``scheme`` picks the candidate-bucket keying — the VERIFIED result
-    is identical either way (both candidate sets are supersets of
-    every hamming <= SIMHASH_MAX_HAMMING pair by pigeonhole, and the
-    exact bit_count(xor) verify is shared), so both replay against the
-    same oracle:
-
-    - 'chunk': 4 tables keyed on one 12-bit chunk each — the compact
-      evidence baseline whose fixed 2^12 bucket space the 100x probe
-      measured at 42.7x growth.
-    - 'combo' (r11, production): C(6,3) = 20 tables keyed on a 3-chunk
-      24-bit combination (Manku WWW'07 §3) — 4096x the bucket space
-      for 5x the key rows, so occupancy (and with it the quadratic
-      candidate term) is deferred 4096x; measured growth in
-      PROBE_100x_mitigations_r11."""
-    # One-spec delegation to the fused pipeline: the multi variant IS
-    # the implementation (signature fold, scheme keying, cap gate,
-    # join, verify live there once); a single spec skips the shared
-    # localCheckpoint and adds only a constant label column, so this
-    # wrapper is plan-identical to the pre-fusion standalone form.
-    return _simhash_pairs_multi(
-        spark, sf_dir, [("_solo", scheme, bucket_cap)]
-    ).select("d1", "d2", "hamming")
 
 
 def _srp_planes(bits: int, dim: int) -> list[list[float]]:
@@ -1511,89 +1265,6 @@ def _plane_values_sql(planes: list[list[float]]) -> str:
     )
 
 
-def _srp_pairs_oracle(bits_sql: str, n_planes: int, dim: int = EMB_DIM) -> str:
-    """DuckDB replay of the SRP near-dup pipeline for ``bits_sql`` sign
-    bits (a SQL expression — a literal for the pinned row, the
-    2*ceil(log2(n)) formula for the adaptive branch) out of
-    ``n_planes`` md5-derived hyperplanes.
-
-    The signature packs ALL n_planes sign bits into one BIGINT
-    (round(dot, 6) before the sign test, matching the Spark side: a
-    projection within float noise of zero must fall on the same side
-    of the hyperplane in both engines — ADVICE r2), then the two band
-    codes are shift/mask slices of the low ``bits`` bits — so the
-    data-dependent bit count changes only scalar mask arithmetic, not
-    the SQL's shape, and the replay stays fully vectorized."""
-    planes = _srp_planes(n_planes, dim)
-    return f"""
-    WITH pbits AS (
-      -- single-row ALWAYS: a literal bits_sql yields one row per
-      -- embedding in the inner SELECT (which would cross-join psig
-      -- n x n below -- ADVICE r9 high), so collapse with an outer
-      -- max(); an aggregate bits_sql is already 1 row and max() of
-      -- it is the identity.
-      SELECT max(b) AS bits
-      FROM (SELECT ({bits_sql}) AS b FROM embeddings) tb),
-    pplanes AS (SELECT * FROM (VALUES {_plane_values_sql(planes)}) AS t(j, p)),
-    pemb AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-             FROM embeddings),
-    pproj AS (SELECT e.vec_id, pl.j,
-                     CASE WHEN round(list_dot_product(e.emb, pl.p), 6) > 0
-                          THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS b
-              FROM pemb e CROSS JOIN pplanes pl),
-    psig AS (SELECT vec_id, CAST(sum(b * (CAST(1 AS BIGINT) << j)) AS BIGINT) AS sig
-             FROM pproj GROUP BY vec_id),
-    pcodes AS (
-      SELECT vec_id,
-             sig & ((CAST(1 AS BIGINT) << (bits // 2)) - 1) AS lo,
-             (sig >> (bits // 2)) & ((CAST(1 AS BIGINT) << (bits - bits // 2)) - 1)
-               AS hi
-      FROM psig, pbits),
-    banded AS (
-      SELECT vec_id, 0 AS band, lo AS bh FROM pcodes
-      UNION ALL
-      SELECT vec_id, 1 AS band, hi AS bh FROM pcodes),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS v1, b.vec_id AS v2
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bh = b.bh AND a.vec_id < b.vec_id),
-    base AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))
-               AS nrm
-      FROM embeddings),
-    verified AS (
-      SELECT v1, v2,
-             round(list_sum(list_transform(range(1, {dim + 1}),
-                   i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))
-                   / (e1.nrm * e2.nrm), 6) AS cosine
-      FROM cand JOIN base e1 ON e1.vec_id = v1 JOIN base e2 ON e2.vec_id = v2)
-    SELECT v1, v2, cosine FROM verified WHERE cosine >= {EMB_COS_THRES}
-    """
-
-
-def _srp_oracle(dim: int = EMB_DIM) -> str:
-    """DuckDB replay of the pinned-{SRP_BITS}-bit SRP pipeline (the
-    `srp` driver branch). Testdata embeddings are EMB_DIM (64)-
-    dimensional at every sf."""
-    return _srp_pairs_oracle(str(SRP_BITS), SRP_BITS, dim)
-
-
-def _srp_adaptive_oracle(dim: int = EMB_DIM) -> str:
-    """DuckDB replay of the ADAPTIVE-bits SRP pipeline (the
-    `srp_adaptive` driver branch — VERDICT r8 #4): bits =
-    clamp(2*ceil(log2(n)), 2, SRP_MAX_BITS) computed from the corpus
-    count by the SAME formula as the Spark side (`srp_adaptive_bits`),
-    so the scale mitigation measured in the 30x probe is itself
-    oracle-proven. All SRP_MAX_BITS planes inline as VALUES rows; the
-    per-corpus bit count only changes the shift/mask band slicing."""
-    bits_sql = (
-        f"greatest(2, least({SRP_MAX_BITS}, "
-        f"2 * CAST(ceil(log2(count(*))) AS BIGINT)))"
-    )
-    return _srp_pairs_oracle(bits_sql, SRP_MAX_BITS, dim)
-
-
 # Plane budget for the srp_recall oracle's VALUES table and the (w -> b)
 # lookup ceiling: w <= SRP_RECALL_MAX_W covers n <= 2^16 vectors — every
 # driver/test scale with headroom — and max(w * b(w)) over that range is
@@ -1606,7 +1277,8 @@ SRP_RECALL_MAX_PLANES = 576
 
 def _srp_recall_oracle(dim: int = EMB_DIM) -> str:
     """DuckDB replay of the RECALL-TARGETED multi-band SRP pipeline
-    (the r12 `srp_recall` driver branch — VERDICT r11 #1's retune).
+    (`dedup_embedding_neardup_pairs_recall`, the `srp_recall` branch of
+    the sketch driver row).
 
     Determinism strategy for the data-dependent sizing: the band WIDTH
     is the integer-exact bit_length formula (no libm), and the band
@@ -1615,13 +1287,13 @@ def _srp_recall_oracle(dim: int = EMB_DIM) -> str:
     only through w, so the oracle inlines a (w -> b) lookup VALUES
     table computed once in Python and joins it on the SQL-computed w.
     Both engines then agree by construction, with zero cross-libm
-    boundary hazard (the failure class the adaptive oracle's log2
-    analysis had to argue away).
+    boundary hazard (a log2 recomputed in SQL would need a boundary
+    argument at every power of two).
 
-    Band hashes avoid the single-BIGINT signature packing of
-    `_srp_pairs_oracle` (b*w can exceed 63 bits): each plane's sign
-    bit groups directly into its band via j // w, j % w — the exact
-    twin of the Spark side's contiguous-segment band columns."""
+    Band hashes never pack the whole signature into one BIGINT (b*w
+    can exceed 63 bits): each plane's sign bit groups directly into its
+    band via j // w, j % w — the exact twin of the Spark side's
+    contiguous-segment band columns."""
     planes = _srp_planes(SRP_RECALL_MAX_PLANES, dim)
     wb_rows = ", ".join(
         f"({w}, {srp_recall_bands((1 << (w - 1)) + 1)[1]})"
@@ -1667,28 +1339,13 @@ def _srp_recall_oracle(dim: int = EMB_DIM) -> str:
     """
 
 
-def srp_adaptive_bits(n: int) -> int:
-    """Adaptive SRP signature width: bits ~ 2*log2(n) keeps expected
-    bucket occupancy constant as the corpus grows (band space 2^(bits/2)
-    per band ~ n), clamped to [2, SRP_MAX_BITS]. The DuckDB oracle
-    computes the identical formula in SQL (`_srp_adaptive_oracle`);
-    boundary parity at exact powers of two holds because both engines
-    take IEEE-double log2 of an exact integer."""
-    import math
-
-    return max(2, min(SRP_MAX_BITS, 2 * math.ceil(math.log2(n))))
-
-
-# Band-count budget for srp_recall_bands. The r12 sizing capped b at
-# 64 SILENTLY — and its own formula says b_want crosses 64 at
-# n ~ 2^20 (cos 0.9 / R 0.95), i.e. the cap revoked the design recall
-# exactly where the production label starts mattering (VERDICT r12
-# what's-wrong #1: expected recall 0.63 at 10^8, 0.19 at 10^11 under
-# the old cap). r13 raises the default budget to 256 — an explicit
-# signature-cost ceiling of b*w <= 256*ceil(log2 n) scan-side
-# projections per vector (~9.5k at 10^11; linear in n, no shuffle
-# term) — and makes any remaining truncation LOUD (warnings.warn with
-# the capped expected recall) instead of silent. b_want crosses 256
+# Band-count budget for srp_recall_bands: an explicit signature-cost
+# ceiling of b*w <= 256*ceil(log2 n) scan-side projections per vector
+# (~9.5k at 10^11; linear in n, no shuffle term). A silent cap would
+# revoke the design recall exactly where it matters (a 64-band cap
+# binds from n ~ 2^20 at cos 0.9 / R 0.95, leaving expected recall
+# 0.63 at 10^8 and 0.19 at 10^11), so any truncation is LOUD
+# (warnings.warn with the capped expected recall). b_want crosses 256
 # at n ~ 5*10^8; past that a deployment either raises max_bands
 # further (cost grows ~n^0.22 — the known LSH price) or accepts the
 # warned, QUANTIFIED recall.
@@ -1702,23 +1359,19 @@ def srp_recall_bands(
     max_bands: int = SRP_MAX_BANDS,
 ) -> tuple[int, int]:
     """(n_bits, n_bands) for a RECALL-TARGETED SRP configuration — the
-    r12 production sizing for embedding near-dup at a stated operating
-    point (VERDICT r11 #1: srp_adaptive's label claimed cos >= 0.9
-    recall it never measured; the hicos probe then measured it
-    DECAYING there — 0.50 at base, 0.17 at 10x, 0.15 at 30x — while
-    this sizing holds 1.0/0.96/0.97, see PROBE_recall_r12).
+    production sizing for embedding near-dup at a stated operating
+    point. Measured recall at cos >= 0.9 holds at 1.0/0.96/0.97 across
+    sf0.1/10x/30x (PROBE_recall_r12), where two half-width bands of
+    2*ceil(log2 n) total bits decayed 0.50 -> 0.17 -> 0.15.
 
     Classic LSH amplification, solved for the two dials:
 
     - band width w = ceil(log2 n): expected same-band collisions for
       UNRELATED vectors stay ~n * const as the corpus grows (bucket
-      space tracks n — the same occupancy argument as
-      srp_adaptive_bits, per band). This is the dial srp_adaptive
-      already turns; what it misses is that per-band recall p^w at any
-      FIXED cosine then decays polynomially in n (p = 1 - acos(c)/pi
-      is the SRP per-bit agreement), which is exactly the decay the
-      r11/r12 probes measured (0.33 at base -> 0.16 at 30x in the
-      cos >= 0.9 stratum).
+      space tracks n). On its own this dial lets per-band recall p^w
+      at any FIXED cosine decay polynomially in n (p = 1 - acos(c)/pi
+      is the SRP per-bit agreement) — the decay the probes measured
+      (0.33 at base -> 0.16 at 30x in the cos >= 0.9 stratum).
     - band count b = ceil(ln(1-R) / ln(1-p^w)): enough independent
       bands that a true pair at the design cosine collides in at
       least one with probability >= R. b grows ~n^(-log2 p) —
@@ -1728,7 +1381,7 @@ def srp_recall_bands(
 
     The signature build cost is b*w scan-side projections per vector —
     linear in n, no shuffle amplification beyond the banded explode
-    the fixed-width variant already pays per band."""
+    (one key row per band)."""
     import math
 
     import warnings
@@ -1743,8 +1396,7 @@ def srp_recall_bands(
     if b < b_want:
         # The budget binds: the built signature CANNOT reach the design
         # recall. Quantify what it does reach (1-(1-p^w)^b) and say so
-        # loudly — a silent cap is how the r12 sizing shipped a label
-        # its own math revoked past ~10^6 vectors.
+        # loudly rather than ship a recall the sizing's own math revokes.
         r_eff = 1.0 - (1.0 - per_band) ** b
         warnings.warn(
             f"srp_recall_bands: band budget max_bands={max_bands} binds at "
@@ -1767,10 +1419,9 @@ def dedup_embedding_neardup_pairs_recall(
     """Embedding near-dup pairs with the recall-targeted multi-band
     SRP sizing (`srp_recall_bands`) — the production embedding
     near-dup path at a stated (design-cosine, recall) operating point.
-    Same pipeline as `dedup_embedding_neardup_pairs` (shared code —
-    multi-band is just more, narrower bands over a wider signature);
-    only the sizing differs. One 1-row count fixes (bits, bands),
-    the same loop-control discipline as the adaptive variant."""
+    One 1-row count (cached per session, see `emb_count`) fixes
+    (bits, bands); `dedup_embedding_neardup_pairs` runs the sized
+    pipeline. Hash-checked against `_srp_recall_oracle`."""
     from hgn_spark.operators.similarity import emb_count
 
     n = emb_count(spark, sf_dir)
@@ -1783,34 +1434,21 @@ def dedup_embedding_neardup_pairs_recall(
 
 
 def dedup_embedding_neardup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket_cap: int | None = None,
-    n_bits: int = SRP_BITS,
-    n_bands: int = 2,
+    spark: SparkSession, sf_dir: str, n_bits: int, n_bands: int
 ) -> DataFrame:
-    """Embedding near-dup pairs via signed-random-projection LSH:
-    16-bit sign signature, candidates share one of two 8-bit bands,
-    exact cosine verify. Hash-checked: the md5-derived planes inline
-    into the DuckDB oracle, which replays the exact pipeline (signs of
+    """Embedding near-dup pairs via signed-random-projection LSH at an
+    explicit sizing: ``n_bits`` sign bits from md5-derived hyperplanes,
+    split into ``n_bands`` contiguous bands; vectors sharing a band key
+    become candidates; exact cosine verify at EMB_COS_THRES (signs of
     64-dim double dot products are stable across engines; the verify
     cosine is rounded to 6 decimals like every similarity ranking).
 
-    Scale ceiling, measured: the band space is FIXED (2 x 8-bit = 256
-    buckets per band), so expected bucket occupancy grows with n and
-    candidate pairs grow ~n^2/256 — the 30x scale probe measured the
-    superlinear step (11.9 s at 10x -> 53.0 s at 30x, 4.5x for 3x
-    data). Production knobs, in preference order: (a) more signature
-    bits — occupancy stays constant when bits ~ 2*log2(n); the
-    signature build is scan-side so extra bits cost nothing at shuffle
-    time (hash-checked per sf as the driver row's `srp_adaptive`
-    branch via dedup_embedding_neardup_pairs_adaptive; this pinned
-    16-bit branch stays as the fixed-width baseline); (b) ``bucket_cap`` — skip
-    mega-buckets outright, the same contract as
-    `ngram_jaccard_pairs_capped`: bounded candidate generation with a
-    stated recall loss (a true near-dup pair hiding ONLY in capped
-    buckets is missed; at near-dup cosine the pair almost surely also
-    shares the other band)."""
+    The sizing decides scale and recall: a FIXED band space lets bucket
+    occupancy — and candidate pairs, ~n^2/2^w — grow with the corpus
+    (a pinned 16-bit / 2-band sketch measured 361x growth at 30x data),
+    and a fixed band count lets recall at a fixed cosine decay with n.
+    `dedup_embedding_neardup_pairs_recall` sizes both dials from the
+    corpus (`srp_recall_bands`); that is the production entry point."""
     from hgn_spark.operators.similarity import load_embeddings
 
     emb = load_embeddings(spark, sf_dir)
@@ -1827,12 +1465,10 @@ def dedup_embedding_neardup_pairs(
     # the verify uses cosine_prenormed (bit-identical to cosine; the
     # per-pair norm folds were 2/3 of every pairwise cosine).
     # Band layout: ``n_bands`` contiguous segments of n_bits//n_bands
-    # bits (the last band absorbs any remainder — for the default
-    # n_bands=2 this is exactly the historical lo/hi halves, so the
-    # driver oracle is untouched). Band WIDTH is the recall dial the
-    # r11 recall probe measures: recall per band ≈ p^width (p = sign
-    # agreement at the target cosine), total 1-(1-p^w)^b — more,
-    # narrower bands buy recall with linearly more candidate volume.
+    # bits (the last band absorbs any remainder). Recall per band ≈
+    # p^width (p = sign agreement at the target cosine), total
+    # 1-(1-p^w)^b — more, narrower bands buy recall with linearly more
+    # candidate volume.
     w_band = n_bits // n_bands
     band_cols = []
     for bi in range(n_bands):
@@ -1842,25 +1478,15 @@ def dedup_embedding_neardup_pairs(
     if n_bits > 32:
         # Wide (recall-targeted) configs: materialize the sign bits so
         # the self-join's two sides don't each recompute hundreds of
-        # interpreted-HOF projections (same rationale as the fused
-        # pass). Narrow configs keep their historical single-pass plan
-        # — the projections are cheaper than the checkpoint.
+        # interpreted-HOF projections (Catalyst shares no subplans).
+        # Narrow configs keep a single-pass plan — the projections are
+        # cheaper than the checkpoint.
         from hgn_spark.checkpoint import loose_local_checkpoint
 
         sig = loose_local_checkpoint(sig)
     banded = sig.select(
         "vec_id", F.posexplode(F.array(*band_cols)).alias("band", "bh")
     )
-    if bucket_cap is not None:
-        # Drop mega-buckets BEFORE the pair join: one aggregation over
-        # the banded rows (tiny — one row per (band, bh) bucket,
-        # broadcast back), so the bound applies to candidate
-        # GENERATION, not post-hoc.
-        sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("bsz"))
-        banded = banded.join(
-            F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
-            ["band", "bh"],
-        ).drop("bsz")
     left = banded.select(F.col("vec_id").alias("v1"), "band", "bh")
     right = banded.select(
         F.col("vec_id").alias("v2"),
@@ -1906,190 +1532,19 @@ def dedup_embedding_neardup_pairs(
     )
 
 
-def dedup_embedding_neardup_pairs_adaptive(
-    spark: SparkSession,
-    sf_dir: str,
-    bucket_cap: int | None = None,
-    n_bands: int = 2,
-) -> DataFrame:
-    """The adaptive-bits SRP variant (scale knob (a) on
-    `dedup_embedding_neardup_pairs`, promoted to driver evidence —
-    VERDICT r8 #4): signature width 2*ceil(log2(n)) instead of the
-    pinned {SRP_BITS}, so bucket occupancy — and with it candidate
-    count per vector — stays constant as the corpus grows instead of
-    the ~n^2/2^bits blowup the 30x probe measured on the fixed-width
-    sketch. One 1-row count action fixes the width (loop-control-style
-    scalar, same discipline as the semantic-dedup stride); the plan
-    itself is static once built."""
-    from hgn_spark.operators.similarity import emb_count
-
-    n = emb_count(spark, sf_dir)
-    return dedup_embedding_neardup_pairs(
-        spark,
-        sf_dir,
-        bucket_cap=bucket_cap,
-        n_bits=srp_adaptive_bits(n),
-        n_bands=n_bands,
-    )
-
-
-def _srp_pairs_multi(
-    spark: SparkSession, sf_dir: str, configs: list[tuple]
-) -> DataFrame:
-    """Several SRP signature widths in ONE shared pass → labeled
-    ``(label, v1, v2, cosine)`` rows, per-label identical to running
-    `dedup_embedding_neardup_pairs(n_bits=...)` per config (pinned in
-    tests/test_llm_ops.py). A config is ``(label, n_bits)`` (two
-    contiguous half-width bands — the historical layout) or
-    ``(label, n_bits, n_bands)`` (r12 — the recall-targeted multi-band
-    sizing joins the fused pass with its own band count; contiguous
-    segments of n_bits // n_bands, matching
-    `dedup_embedding_neardup_pairs`'s layout exactly).
-
-    Running the pinned and adaptive widths separately costs two
-    signature scans, two bucket joins and two verify joins; fused they
-    share everything the widths have in common — the plane
-    projections are computed once up to max(bits) (plane j is the
-    same md5 derivation at every width, so a narrow config just reads
-    a prefix), band rows carry a config label so buckets never mix
-    across configs (one self-join instead of one per config), and
-    exact-cosine verify runs once over the UNION of candidate pairs
-    (a pair surfaced by both configs verifies once and rejoins both
-    labels). Measured on the registered row: the srp+srp_adaptive
-    pair dropped from two full pipelines to one superset pipeline."""
-    from hgn_spark.operators.similarity import cosine_prenormed, load_embeddings
-
-    emb = load_embeddings(spark, sf_dir)
-    max_bits = max(c[1] for c in configs)
-    planes = _srp_planes(max_bits, EMB_DIM)
-    # One-expression bits array (see _srp_bits_array): bit-identical
-    # per plane to the interpreted fold the function shipped with,
-    # without the per-plane parse/analyze/codegen overhead that
-    # dominated the wide recall-targeted signature's build.
-    sig = emb.select("vec_id", _srp_bits_array(planes).alias("bits"))
-    if max_bits > 32:
-        # Materialize the sign bits ONCE: Catalyst shares no subplans,
-        # so every per-config union arm below — and both sides of the
-        # bucket self-join — would re-run the full interpreted-HOF
-        # projection scan. Harmless at the historical 16-22 bits;
-        # ruinous once the r12 recall-targeted config raises max_bits
-        # to ~165 at sf0.1 (the uncheckpointed fused row measured
-        # 38.5-50 s vs 7.7 s — the scan ran 3x inside the union alone).
-        # The frame is n rows of small ints; the band sums derived from
-        # it are cheap codegen'd arithmetic.
-        from hgn_spark.checkpoint import loose_local_checkpoint
-
-        sig = loose_local_checkpoint(sig)
-    # One banded frame for all configs: (label, band, bh) keys a
-    # config-scoped bucket, so the single self-join below can never
-    # pair vectors across configs or bands.
-    arms = []
-    for cfg in configs:
-        label, n_bits = cfg[0], cfg[1]
-        n_bands = cfg[2] if len(cfg) > 2 else 2
-        w_band = n_bits // n_bands
-        band_cols = []
-        for bi in range(n_bands):
-            lo_j = bi * w_band
-            hi_j = (bi + 1) * w_band if bi < n_bands - 1 else n_bits
-            band_cols.append(_band_from_bits(lo_j, hi_j))
-        arms.append(
-            sig.select(
-                F.lit(label).alias("label"),
-                "vec_id",
-                F.posexplode(F.array(*band_cols)).alias("band", "bh"),
-            )
-        )
-    banded = arms[0]
-    for a in arms[1:]:
-        banded = banded.unionByName(a)
-    left = banded.select("label", F.col("vec_id").alias("v1"), "band", "bh")
-    right = banded.select(
-        F.col("label").alias("label2"),
-        F.col("vec_id").alias("v2"),
-        F.col("band").alias("band2"),
-        F.col("bh").alias("bh2"),
-    )
-    cands = (
-        left.join(
-            right,
-            (F.col("label") == F.col("label2"))
-            & (F.col("band") == F.col("band2"))
-            & (F.col("bh") == F.col("bh2"))
-            & (F.col("v1") < F.col("v2")),
-        )
-        .select("label", "v1", "v2")
-        .distinct()
-    )
-    e1 = emb.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("e1"),
-        F.col("nrm").alias("n1"),
-    )
-    e2 = emb.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("e2"),
-        F.col("nrm").alias("n2"),
-    )
-    # Verify the LABELED pairs directly (r14). The previous shape
-    # verified each distinct (v1, v2) once and re-joined the labels —
-    # but that plan references `cands` twice, and Catalyst shares no
-    # subplans, so the whole candidate-generation subtree (banded
-    # union + bucket self-join + distinct) EXECUTED twice per drain.
-    # Verifying per labeled pair costs at most one extra cosine fold
-    # per additional label on a verified pair (cheap, pair volume is
-    # post-LSH) and runs candidate generation once — the better trade
-    # at sf0.1 (measured) and at scale, where the bucket join, not the
-    # verify, is the dominant term. Output rows are identical: the
-    # same (label, v1, v2) set with the same rounded cosine.
-    return (
-        cands.join(e1, "v1")
-        .join(e2, "v2")
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenormed(F.col("e1"), F.col("e2"), F.col("n1"), F.col("n2")),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= EMB_COS_THRES)
-        .select("label", "v1", "v2", "cosine")
-    )
-
-
 @register(
     "dedup_minhash_lsh_pairs",
-    # All three sketch-LSH candidate generators in one labeled driver
-    # row (the r7 window consolidation that paid for the
-    # chunk_documents and dedup_semantic_clusters oracle rows). Each
-    # branch remains hash-checked end to end — the md5-derived
+    # The three sketch-LSH candidate generators in one labeled driver
+    # row. Each branch is hash-checked end to end — the md5-derived
     # permutation/plane constants inline into the oracle, which replays
     # every sketch exactly. `score` carries the branch's verify
     # statistic: exact jaccard (minhash), hamming distance (simhash,
     # cast to double), exact cosine (srp).
     oracle=(
-        "SELECT 'minhash' AS method, d1 AS a, d2 AS b, jaccard AS score FROM ("
+        "SELECT 'minhash_recall' AS method, d1 AS a, d2 AS b, jaccard AS score FROM ("
         + _minhash_oracle()
-        # minhash_recall (r14): the recall-sized sketch replayed at its
-        # own (num_perm, bands) — the sizing itself is a pure function
-        # of (J, R, r), so inlining its result keeps the oracle
-        # integer-exact with zero libm hazard.
-        + ") UNION ALL SELECT 'minhash_recall', d1, d2, jaccard FROM ("
-        + _minhash_oracle(*minhash_recall_perms())
-        + ") UNION ALL SELECT 'simhash', d1, d2, CAST(hamming AS DOUBLE) FROM ("
-        + _simhash_oracle()
-        + ") UNION ALL SELECT 'simhash_cap', d1, d2, CAST(hamming AS DOUBLE) FROM ("
-        + _simhash_oracle(SIMHASH_CAP)
-        # simhash_manku replays against the SAME uncapped oracle: the
-        # combination bucketing's verified pairs are identical to the
-        # chunk scheme's by pigeonhole (see dedup_simhash_pairs) — the
-        # driver hash proves the equality per sf, not just the theorem.
         + ") UNION ALL SELECT 'simhash_manku', d1, d2, CAST(hamming AS DOUBLE) FROM ("
         + _simhash_oracle()
-        + ") UNION ALL SELECT 'srp', v1, v2, cosine FROM ("
-        + _srp_oracle()
-        + ") UNION ALL SELECT 'srp_adaptive', v1, v2, cosine FROM ("
-        + _srp_adaptive_oracle()
         + ") UNION ALL SELECT 'srp_recall', v1, v2, cosine FROM ("
         + _srp_recall_oracle()
         + ")"
@@ -2100,122 +1555,42 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based near-dup pair generation, all three sketches as
     labeled `method` branches of one driver row:
 
-    - 'minhash': MinHash-LSH over shingle sets (minhash_lsh_pairs);
-    - 'simhash': bit-packed SimHash with pigeonhole chunk bucketing
-      (dedup_simhash_pairs);
-    - 'srp': signed-random-projection LSH over embeddings
-      (dedup_embedding_neardup_pairs);
-    - 'simhash_cap' (r10): the same pipeline behind the chunk-bucket
-      cap (SIMHASH_CAP) — the guard for simhash's fixed chunk space,
-      whose occupancy the 100x probe measured going superlinear
-      (42.7x at 100x data); PROBE_recall_r11 then measured the fixed
-      cap's recall collapsing to 0.0 by 10x (every bucket outgrows any
-      fixed cap when the bucket SPACE is fixed), demoting this branch
-      to guard-shape evidence;
-    - 'simhash_manku' (r11, production): the same signatures keyed on
-      C(6,3) = 20 three-chunk combinations (24-bit keys) — verified
-      result identical to 'simhash' by pigeonhole, bucket space 4096x,
-      so no cap is needed in the first place;
-    - 'srp_adaptive': the same pipeline at the 2*ceil(log2(n))
-      adaptive signature width (dedup_embedding_neardup_pairs_adaptive)
-      — holds bucket occupancy (candidate VOLUME) constant as the
-      corpus grows, hash-checked per sf rather than only measured in
-      the 30x probe (VERDICT r8 #4). DEMOTED to evidence in r12:
-      PROBE_recall_r12's planted cos>=0.9 pairs measured its recall at
-      the claimed near-dup operating point DECAYING with corpus growth
-      (0.50 at base -> 0.17 at 10x -> 0.15 at 30x) — two half-width
-      bands of ceil(log2 n) bits each lose p^w per band polynomially
-      in n. The volume dial was right; it needed the band-count dial
-      beside it;
-    - 'srp_recall' (r12, production): the recall-TARGETED sizing
-      (srp_recall_bands — band width ceil(log2 n) for constant
-      occupancy, band count solving 1-(1-p^w)^b >= R at the design
-      cosine). Measured recall at cos>=0.9: 1.0 / 0.96 / 0.97 at
-      sf0.1 / 10x / 30x — flat where srp_adaptive decayed — for
-      b ~ n^0.22 bands (15 -> 35 over that range), the classic LSH
-      price of holding recall under growth.
+    - 'minhash_recall': MinHash-LSH over shingle sets at the
+      recall-targeted `minhash_recall_perms` sizing
+      (minhash_lsh_pairs);
+    - 'simhash_manku': bit-packed SimHash keyed on 3-of-6 chunk
+      combinations (dedup_simhash_pairs);
+    - 'srp_recall': signed-random-projection LSH over embeddings at
+      the recall-targeted `srp_recall_bands` sizing
+      (dedup_embedding_neardup_pairs_recall).
 
     The branches share the scan-side-signature → bucket-equi-join →
     exact-verify shape that keeps candidate generation linear in corpus
     size at 100 TB; they differ in the sketch (set resemblance vs
     bit-space hamming vs embedding angle), so one row exercises all
-    three verify statistics."""
-    # 'minhash' (pinned 16-perm/4-band evidence baseline) and
-    # 'minhash_recall' (r14, production: minhash_recall_perms solves
-    # the band count for the (J=JACCARD_THRES, R=0.95) operating point
-    # where the pinned 4x4 S-curve tops out at ~0.875) run as ONE
-    # nested pipeline (r15, VERDICT r14 #3): the pinned bands are the
-    # first 4 of the recall sketch's 6 (shared md5 sequence, same
-    # rows-per-band), so one signature fold + one band join + one
-    # verify yields both arms; the label is an explode over the
-    # in_inner flag — no rerun of the candidate subtree per label, no
-    # checkpoint barrier (the trap the rejected simhash fusion hit).
-    mh = minhash_lsh_pairs_nested(spark, sf_dir).select(
-        F.explode(
-            F.when(
-                F.col("in_inner"),
-                F.array(F.lit("minhash"), F.lit("minhash_recall")),
-            ).otherwise(F.array(F.lit("minhash_recall")))
-        ).alias("method"),
+    three verify statistics. The measurements that retired the
+    pinned-dial variants of each sketch are in PROBE_recall_r11,
+    PROBE_recall_r12, PROBE_text_clustered_r13 and
+    PROBE_100x_heavy_r10."""
+    mh = minhash_lsh_pairs(spark, sf_dir).select(
+        F.lit("minhash_recall").alias("method"),
         F.col("d1").alias("a"),
         F.col("d2").alias("b"),
         F.col("jaccard").alias("score"),
     )
-    # The three simhash configurations run as standalone pipelines —
-    # 'simhash' (chunk-scheme evidence baseline), 'simhash_cap' (the
-    # r10 guard; non-vacuous at sf0.01 with 13 pairs vs simhash's 17,
-    # demoted to evidence by PROBE_recall_r11's 0.0-by-10x recall) and
-    # 'simhash_manku' (r11 production combination keying,
-    # result-identical to 'simhash' by pigeonhole). A fused
-    # single-join variant exists (`_simhash_pairs_multi`, parity
-    # pinned in tests) and wins in a warm dedicated session (6.8 s vs
-    # 7.1 s row floor), but MEASURED UNDER THE BENCH SUITE it loses
-    # (5-pass spread min 9.26 s vs 7.10 s): the three small
-    # per-config joins broadcast and pipeline, while the fused
-    # 28n-row union join + checkpoint barrier serializes — so the
-    # registered row keeps the standalone plans and the fusion stays
-    # the measured-and-rejected alternative, not the shipped one.
-    sh_parts = []
-    for label, scheme, cap in (
-        ("simhash", "chunk", None),
-        ("simhash_cap", "chunk", SIMHASH_CAP),
-        ("simhash_manku", "combo", None),
-    ):
-        sh_parts.append(
-            dedup_simhash_pairs(
-                spark, sf_dir, bucket_cap=cap, scheme=scheme
-            ).select(
-                F.lit(label).alias("method"),
-                F.col("d1").alias("a"),
-                F.col("d2").alias("b"),
-                F.col("hamming").cast("double").alias("score"),
-            )
-        )
-    sh_all = sh_parts[0]
-    for p in sh_parts[1:]:
-        sh_all = sh_all.unionByName(p)
-    # Both SRP widths run FUSED in one shared pass (one signature
-    # scan up to max(bits), one labeled bucket join, one verify of the
-    # union'd pairs) — per-label results identical to the standalone
-    # functions, pinned in tests/test_llm_ops.py.
-    from hgn_spark.operators.similarity import emb_count
-
-    n = emb_count(spark, sf_dir)
-    srp_all = _srp_pairs_multi(
-        spark,
-        sf_dir,
-        [
-            ("srp", SRP_BITS),
-            ("srp_adaptive", srp_adaptive_bits(n)),
-            ("srp_recall", *srp_recall_bands(n)),
-        ],
-    ).select(
-        F.col("label").alias("method"),
+    sh = dedup_simhash_pairs(spark, sf_dir).select(
+        F.lit("simhash_manku").alias("method"),
+        F.col("d1").alias("a"),
+        F.col("d2").alias("b"),
+        F.col("hamming").cast("double").alias("score"),
+    )
+    srp = dedup_embedding_neardup_pairs_recall(spark, sf_dir).select(
+        F.lit("srp_recall").alias("method"),
         F.col("v1").alias("a"),
         F.col("v2").alias("b"),
         F.col("cosine").alias("score"),
     )
-    return mh.unionByName(sh_all).unionByName(srp_all)
+    return mh.unionByName(sh).unionByName(srp)
 
 
 def _semantic_oracle() -> str:

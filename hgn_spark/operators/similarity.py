@@ -1,12 +1,10 @@
 """Similarity search over the `embeddings` table (array<float> vectors).
 
 Engine extension family (no reference counterpart — the reference's
-similarity is per-edge cosine on one-hot attributes, SURVEY §2.9 G9):
+similarity is per-edge cosine on one-hot attributes, SURVEY §2.9 G9).
 
-One driver row, `simsearch_topk_cosine`, carries all six strategies
-as labeled `variant` branches (exact / seed / kmeans — the r7 window
-consolidation — plus srp-lsh multiprobe, the r8 evidence upgrade, plus
-the r10 scale mitigations ivf_adaptive / lsh_adaptive):
+One driver row, `simsearch_topk_cosine`, carries the exact yardstick
+and the three production ANN paths as labeled `variant` branches:
 
 - 'exact' (`simsearch_exact_topk`): brute-force top-k — each query
   scans the corpus once. This is the correctness baseline and the
@@ -14,17 +12,17 @@ the r10 scale mitigations ivf_adaptive / lsh_adaptive):
   parallelizes perfectly and the per-query state is a k-row heap
   (here a window top-k). Hash-checked against DuckDB computing the
   identical left-fold double cosine.
-- 'seed'/'kmeans' (`simsearch_ivf_topk`): the scale path — IVF-style
-  bucketing. Vectors
-  are assigned to their nearest centroid once (inverted lists); a query
-  probes only the nearest `nprobe` lists and re-ranks exactly. Probed
-  fraction ≈ nprobe/n_centroids of the corpus instead of all of it.
-  Centroids are k-means-refined: deterministic stride-sampled seeds
-  (vec_id % stride == 0) followed by one Lloyd iteration (assign to
-  nearest seed → per-dimension mean), all in DataFrames. A production
-  run would iterate Lloyd on a sample to convergence, but the plan
-  shape (broadcast centroids → argmax assign → equi-join on list id →
-  exact re-rank) is the production shape already.
+- 'ivf_adaptive' / 'ivf_linear': IVF-style bucketing. Vectors are
+  assigned to a centroid once (inverted lists); a query probes only
+  its nearest `nprobe` lists and re-ranks exactly. Centroids are
+  ceil(sqrt(n)) stride-sampled seeds (`ivf_adaptive_stride`);
+  `ivf_build_linear` additionally trains them with Lloyd on a hash
+  sample and assigns through SRP buckets, so the BUILD stays linear
+  in n. nprobe is recall-calibrated on each built index
+  (`ivf_calibrate_nprobe`).
+- 'lsh_adaptive' (`simsearch_lsh_topk`): SRP-LSH buckets whose width
+  tracks the corpus (`lsh_adaptive_bits`) with 1-bit-flip multiprobe —
+  the data-independent scale path (no training pass).
 
 Cosines are computed with native higher-order functions (zip_with +
 aggregate over double), never per-row Python.
@@ -42,21 +40,19 @@ from hgn_spark.checkpoint import loose_local_checkpoint
 from hgn_spark.registry import register
 
 QUERY_STRIDE = 50     # vec_id % 50 == 0 → the standing query set
-CENTROID_STRIDE = 25  # deterministic IVF centroid subsample
 TOP_K = 5
 NPROBE = 3
 
 
 def ivf_adaptive_stride(n: int) -> int:
-    """Centroid stride for the scale-safe IVF variant: ceil(sqrt(n)),
-    so nlist ~ sqrt(n) — the classic IVF sizing. The r10 100x probe
-    measured WHY the fixed stride cannot ship at scale: with
-    CENTROID_STRIDE pinned, nlist grows linearly with the corpus and
-    the assign step is n x nlist ~ n^2 — 846.9x growth at 100x data
-    (1490 s). sqrt-n centroids bound the index BUILD at O(n^1.5) (the
+    """Centroid stride for IVF: ceil(sqrt(n)), so nlist ~ sqrt(n) — the
+    classic IVF sizing. A fixed stride cannot ship at scale: nlist then
+    grows linearly with the corpus and the assign step is n x nlist ~
+    n^2 — 846.9x growth at 100x data (1490 s, PROBE_100x_heavy_r10).
+    sqrt-n centroids bound the index BUILD at O(n^1.5) (the
     same contract as semantic dedup's ceil(sqrt n) clusters) and the
     recurring per-query cost at nprobe x sqrt(n) candidates (nprobe
-    recall-calibrated per index since r13, ivf_calibrate_nprobe). IEEE
+    recall-calibrated per index, ivf_calibrate_nprobe). IEEE
     sqrt/ceil are correctly rounded, so Python here and
     ceil(sqrt(count(*))) oracle-side cannot disagree."""
     import math
@@ -72,18 +68,20 @@ def ivf_adaptive_stride(n: int) -> int:
 # session-cache discipline as dedup._DOC_SETS_CACHE: localCheckpoint
 # cuts the lineage, registry.clear_session_caches drops the blocks
 # between bench passes so pass 2 re-pays the real build.
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Build lock for the cache (ADVICE r14): the check-then-set is called
+_EMB_CACHE: dict[tuple, DataFrame] = {}
+# Build lock for the cache: the check-then-set is called
 # from simsearch's concurrent chains; see load_embeddings.
 _EMB_BUILD_LOCK = threading.Lock()
 # Corpus count per (session, sf_dir): every adaptive sizing
 # (ivf_adaptive_stride, lsh/srp widths, calibration sampling) needs n;
 # counting the materialized checkpoint once replaces one count() JOB
 # per consuming row.
-_EMB_COUNT: dict[tuple[str, str], int] = {}
-_EMB_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
+_EMB_COUNT: dict[tuple, int] = {}
+_EMB_BLOCK_IDS: dict[tuple, set[int]] = {}
 
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
+# Keys come from registry._table_cache_key, which fingerprints the
+# embeddings files so a rewritten table never hits a stale entry.
+from hgn_spark.registry import _table_cache_key, register_cache as _register_cache  # noqa: E402
 
 _register_cache("embeddings", _EMB_CACHE, _EMB_COUNT, block_ids=_EMB_BLOCK_IDS)
 
@@ -95,11 +93,11 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Repartition: the table arrives as one parquet file = one partition,
     which would serialize every per-vector cosine onto a single task.
     The `nrm` column feeds cosine_prenormed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _table_cache_key(spark, sf_dir, "embeddings")
     cached = _EMB_CACHE.get(key)
     if cached is not None:
         return cached
-    # Double-checked build under a module lock (ADVICE r14): the
+    # Double-checked build under a module lock: the
     # simsearch chains call this from a thread pool; two racing threads
     # would each build AND checkpoint the frame, the loser's blocks
     # staying persisted until clear_session_caches.
@@ -122,7 +120,7 @@ def emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus size, counted once per (session, sf_dir) on the
     materialized embeddings checkpoint (the count is metadata-cheap
     there) and cached alongside it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = _table_cache_key(spark, sf_dir, "embeddings")
     n = _EMB_COUNT.get(key)
     if n is None:
         n = load_embeddings(spark, sf_dir).count()
@@ -256,8 +254,7 @@ def _lloyd_exploded_vals(assign0: DataFrame) -> DataFrame:
     """Shared Lloyd prologue: explode a nearest-seed assignment to
     (cent_id, vec_id, dim, val) rows — |corpus| × dim rows into the
     per-dimension aggregation, one shuffle. Takes the ASSIGNMENT (not
-    emb+seeds) so callers that already computed it — the IVF seed
-    variant's inverted lists are exactly this frame — can share it
+    emb+seeds) so a caller that already computed it can share it
     instead of re-running the broadcast argmax."""
     return assign0.select(
         "cent_id",
@@ -284,8 +281,8 @@ def lloyd_refine(emb: DataFrame, seeds: DataFrame) -> DataFrame:
     """One Lloyd iteration, PRODUCTION path: assign every vector to its
     nearest seed, then replace each seed with its cluster's
     per-dimension mean via plain ``avg()`` — constant aggregation state
-    per (cent_id, dim) group, safe at any cluster size (the 100×
-    concern VERDICT r5 #4 raised against the pinned-fold variant).
+    per (cent_id, dim) group, safe at any cluster size (the pinned-fold
+    variant's collect_list buffer is not, at 100×).
 
     The mean is rounded to 6 decimals before any downstream cosine —
     numerically it agrees with `_lloyd_refine_pinned` at that rounding
@@ -347,54 +344,19 @@ def _lloyd_refine_pinned(
 
 
 # ---------------------------------------------------------------------------
-# Oracle fragments. Both IVF variants replay the identical
-# assign → probe → rerank tail; they differ only in how `cents` is
-# derived (raw stride seeds vs one Lloyd iteration over them).
-# CAST(c.ce[i] AS DOUBLE) in the tail is the float→double widening for
-# the seed variant and a no-op for the kmeans variant (already double)
-# — matching Spark's as_double on both paths.
+# Oracle fragments for the `ivf_adaptive` branch: prelude (base vectors
+# with norms) + sqrt-n centroid derivation + the assign → calibrate →
+# probe → rerank tail. CAST(c.ce[i] AS DOUBLE) in the tail is the
+# float→double widening of the stride-seed centroids, matching Spark's
+# as_double.
 # ---------------------------------------------------------------------------
 
-_SQL_PRELUDE = f"""
+_SQL_PRELUDE = """
     WITH base AS (
       SELECT vec_id, embedding,
              sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))
                AS nrm
-      FROM embeddings),
-    seeds AS (SELECT vec_id AS cent_id, embedding AS ce, nrm AS cn FROM base
-              WHERE vec_id % {CENTROID_STRIDE} = 0)"""
-
-_SQL_SEED_CENTS = """,
-    cents AS (SELECT cent_id, ce, cn FROM seeds)"""
-
-# One Lloyd iteration: assign to nearest seed, then per-dimension
-# cluster means in pinned (vec_id-sorted) fold order, rounded to 6
-# decimals — bit-equal to Spark's _lloyd_refine_pinned.
-_SQL_KMEANS_CENTS = """,
-    assign0 AS (
-      SELECT vec_id, cent_id, embedding FROM (
-        SELECT e.vec_id, c.cent_id, e.embedding,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY round(list_sum(list_transform(range(1, len(e.embedding) + 1),
-                            i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.ce[i] AS DOUBLE)))
-                          / (e.nrm * c.cn), 6) DESC, c.cent_id) AS rn
-        FROM base e CROSS JOIN seeds c)
-      WHERE rn = 1),
-    vals AS (
-      SELECT cent_id, vec_id, i, CAST(embedding[i] AS DOUBLE) AS val
-      FROM (SELECT cent_id, vec_id, embedding,
-                   unnest(generate_series(1, len(embedding))) AS i
-            FROM assign0)),
-    newc AS (
-      SELECT cent_id, list(m ORDER BY i) AS ce FROM (
-        SELECT cent_id, i,
-               round(list_sum(list(val ORDER BY vec_id)) / count(*), 6) AS m
-        FROM vals GROUP BY cent_id, i)
-      GROUP BY cent_id),
-    cents AS (SELECT cent_id, ce,
-                     sqrt(list_sum(list_transform(ce, x -> x * x))) AS cn
-              FROM newc)"""
+      FROM embeddings)"""
 
 def _sql_calibration_ctes(
     prefix: str,
@@ -472,10 +434,9 @@ def _dot_float_sql(a: str, b: str) -> str:
     )
 
 
-def _sql_tail(nprobe_expr: str = str(NPROBE), cal_block: str = "") -> str:
-    """The shared assign → probe → rerank oracle tail. ``nprobe_expr``
-    is the probe-depth filter (a literal for the pinned evidence
-    branches, a calibration scalar subquery for the production ones);
+def _sql_tail(nprobe_expr: str, cal_block: str) -> str:
+    """The assign → probe → rerank oracle tail. ``nprobe_expr`` is the
+    probe-depth filter (the calibration scalar subquery);
     ``cal_block`` injects the calibration CTEs after ``assign``."""
     return f""",
     assign AS (
@@ -516,33 +477,15 @@ def _sql_tail(nprobe_expr: str = str(NPROBE), cal_block: str = "") -> str:
     """
 
 
-_SQL_TAIL = _sql_tail()
-
-
-def _ivf_seed_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(emb, seeds, seed_assign) — the corpus with norms, the stride
-    seeds, and the nearest-SEED assignment. The seed variant's inverted
-    lists and the kmeans variant's Lloyd input are the SAME frame, so a
-    caller building both variants computes the broadcast argmax once
-    (and may materialize it) instead of three times."""
-    emb = load_embeddings(spark, sf_dir)
-    seeds = emb.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
-    return emb, seeds, _assign_nearest(emb, seeds)
-
 
 def _ivf_seed_frames_adaptive(
     spark: SparkSession, sf_dir: str, n: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(emb, seeds, seed_assign) with the sqrt-n centroid stride — the
-    scale path (see ivf_adaptive_stride). The count() is 1-scalar loop
-    control, the same class as srp_adaptive_bits' corpus count;
-    callers that already counted the corpus pass ``n``."""
+    """(emb, seeds, seed_assign) with the sqrt-n centroid stride (see
+    ivf_adaptive_stride): the corpus with norms, the stride seeds as
+    centroids, and the exact nearest-centroid assignment. The corpus
+    count is 1-scalar loop control (cached per session, see
+    `emb_count`); callers that already counted the corpus pass ``n``."""
     emb = load_embeddings(spark, sf_dir)
     stride = ivf_adaptive_stride(n if n is not None else emb_count(spark, sf_dir))
     seeds = emb.filter(F.col("vec_id") % stride == 0).select(
@@ -565,13 +508,13 @@ def ivf_build_linear(
     pinned: bool = False,
     sample_floor: int = IVF_SAMPLE_FLOOR,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Linear-time IVF index build (VERDICT r10 #2): the sqrt-n-centroid
-    `ivf_adaptive` bounded the fixed-stride variant's n^2 assign at
-    O(n^1.5), but the probes show the n x sqrt(n) full argmax-assign
-    dominating the BUILD as the corpus grows (5.7x time for 3x data,
-    100x -> 300x). This builder replaces both superlinear steps:
+    """Linear-time IVF index build: the sqrt-n-centroid `ivf_adaptive`
+    index bounds the assign at O(n^1.5), but the probes show its
+    n x sqrt(n) full argmax-assign dominating the BUILD as the corpus
+    grows (5.7x time for 3x data, 100x -> 300x). This builder replaces
+    both superlinear steps:
 
-    - **Sampled Lloyd** (the judge's sketch): centroids are trained on
+    - **Sampled Lloyd**: centroids are trained on
       a deterministic md5-hash sample of max(IVF_SAMPLE_FLOOR,
       8 * nlist) vectors instead of the full corpus, so each Lloyd
       iteration costs sample x nlist ~ 8 * n — linear — instead of
@@ -598,13 +541,12 @@ def ivf_build_linear(
     that branch is the bit-replayable evidence; this builder is the
     production path at 100 TB, where the exact assign is the
     superlinear step. Returns `(emb, cents, assign)` ready for
-    `_ivf_query(frames=...)`.
+    `_ivf_query`.
 
-    r12 (VERDICT r11 #2 — "the production build path stops being
-    tests-only"): ``pinned=True`` swaps the avg-based `lloyd_refine`
-    for `_lloyd_refine_pinned` (vec_id-sorted fold means — the same
-    oracle-replay discipline as the kmeans branch) so the registered
-    `ivf_linear` driver branch can hash-check THIS builder's full
+    ``pinned=True`` swaps the avg-based `lloyd_refine` for
+    `_lloyd_refine_pinned` (vec_id-sorted fold means, which DuckDB can
+    replay bit-exactly) so the registered `ivf_linear` driver branch
+    can hash-check THIS builder's full
     topology (md5 sample -> Lloyd -> SRP-bucket assign -> rescue)
     against DuckDB; production callers keep the default avg path,
     whose constant aggregation state survives any cluster size.
@@ -711,30 +653,18 @@ def ivf_build_linear(
 
 
 def _ivf_query(
-    spark: SparkSession,
-    sf_dir: str,
-    refine: bool,
-    frames: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    frames: tuple[DataFrame, DataFrame, DataFrame],
     nprobe: int = NPROBE,
     query_stride: int = QUERY_STRIDE,
 ) -> DataFrame:
-    """Shared IVF pipeline: centroids → assign → probe → exact re-rank.
-    ``frames`` lets a caller inject pre-(computed|materialized)
-    `_ivf_seed_frames` output. ``nprobe`` is the recall/cost dial —
-    r13: the production branches pass the recall-calibrated value
-    (ivf_calibrate_nprobe) while seed/kmeans evidence branches stay at
-    the pinned NPROBE. ``query_stride`` widens the standing-query
+    """IVF query over a built index: probe → exact re-rank. ``frames``
+    is ``(emb, cents, assign)`` from `_ivf_seed_frames_adaptive` or
+    `ivf_build_linear`. ``nprobe`` is the recall/cost dial — the
+    production callers pass the recall-calibrated value
+    (ivf_calibrate_nprobe). ``query_stride`` widens the standing-query
     stride so scale probes can bound the query-set size (recall is a
     per-query average; a few hundred queries measure it)."""
-    emb, seeds, seed_assign = frames or _ivf_seed_frames(spark, sf_dir)
-    if refine:
-        # The registered driver row must bit-replay in DuckDB → pinned
-        # fold; production callers train centroids with the avg-based
-        # lloyd_refine. The Lloyd input IS the seed assignment.
-        cents = _lloyd_refine_pinned(emb, seeds, assign0=seed_assign)
-        assign = _assign_nearest(emb, cents)
-    else:
-        cents, assign = seeds, seed_assign
+    emb, cents, assign = frames
     # Queries probe their nprobe nearest lists.
     q = emb.filter(F.col("vec_id") % query_stride == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -770,13 +700,13 @@ def _ivf_query(
     )
 
 
-# Recall-targeted nprobe sizing (VERDICT r12 #1). The r12 sweep
+# Recall-targeted nprobe sizing. The nprobe sweep
 # (PROBE_ivf_build_r12) measured WHY any fixed nprobe cannot ship:
 # nlist ~ sqrt(n) grows with the corpus, so a pinned nprobe probes a
 # shrinking fraction of lists and recall@5 decays with n (0.95 at
 # sf0.1 -> 0.44-0.51 at 100x at nprobe=32). A static nprobe(n) formula
 # fit to one corpus would be equally wrong the other way: the
-# recall-vs-probed-fraction curve is a property of the DATA (the r12
+# recall-vs-probed-fraction curve is a property of the DATA (the
 # sweep's own 300x readings sit far above its 100x readings at equal
 # fraction), so the dial must be sized from the corpus at hand.
 # `ivf_calibrate_nprobe` therefore measures the curve on the built
@@ -825,16 +755,15 @@ def calibration_truth(
     A pure function of the CORPUS (not of any index), so a caller
     calibrating several indexes over the same embeddings computes it
     once — at 100 TB this halves the dominant calibration term for the
-    registered row's two production branches (guide §2.3: don't
-    compute what you can share). Same 6-decimal rounding + id
+    registered row's two IVF branches. Same 6-decimal rounding + id
     tie-breaks as the in-line form, so the DuckDB replay per branch is
     unchanged.
 
-    ``calq`` (r15, guide §2.3): a pre-materialized calibration-query
+    ``calq``: a pre-materialized calibration-query
     frame — like the truth, the query SAMPLE is a pure function of the
     corpus, so a caller calibrating several indexes materializes it
     once instead of paying the salted-md5 corpus filter per consumer
-    (three evaluations at r14: one here, one per branch calibration)."""
+    (one here, one per branch calibration)."""
     if calq is None:
         calq = _calibration_queries(emb, n, m_target)
     pairs = (
@@ -953,15 +882,14 @@ def ivf_calibrate_nprobe(
     return max(1, int(row["np"]))
 
 
-LSH_BITS = 5        # SRP bucket width → 2^5 inverted lists
 LSH_MULTIPROBE = 1  # probe own bucket + every flip of <= this many bits
 # Adaptive-width knobs: hold expected bucket occupancy near
 # LSH_TARGET_BUCKET (must be a power of two — the bit-shift form below
-# is exact) instead of letting it grow with the corpus. The r10 100x
-# probe measured the fixed width's failure: at LSH_BITS=5 the probed
-# fraction is constant (6/32) while bucket size grows with n, so
-# candidates grow ~n^2/32 — 74.2x growth at 100x data. MAX_BITS bounds
-# the BIGINT mask arithmetic, far above any realistic corpus.
+# is exact) instead of letting it grow with the corpus. A fixed width
+# fails at scale: at 5 bits the probed fraction is constant (6/32)
+# while bucket size grows with n, so candidates grow ~n^2/32 — 74.2x
+# growth at 100x data (PROBE_100x_heavy_r10). MAX_BITS bounds the
+# BIGINT mask arithmetic, far above any realistic corpus.
 LSH_TARGET_BUCKET = 64
 LSH_MAX_BITS = 24
 
@@ -971,183 +899,16 @@ def lsh_adaptive_bits(n: int) -> int:
     ceil(log2(n / LSH_TARGET_BUCKET)), computed INTEGER-EXACTLY as
     (n-1).bit_length() - log2(target) — no libm log2, so the Spark
     side and the oracle's length(bin(count(*) - 1)) form cannot
-    disagree at power-of-two boundaries (the hazard the SRP adaptive
-    oracle handles with boundary-parity tests; here it is structural).
-    At the driver scales: n=2000 -> 5 bits (equal to the pinned
-    LSH_BITS — boundary parity with the fixed branch), n=500 -> 3,
-    n=200000 -> 12 (4096 buckets, ~49 occupancy, 0.3% probed)."""
+    disagree at power-of-two boundaries (no libm log2 to argue about).
+    At the driver scales: n=2000 -> 5 bits, n=500 -> 3, n=200000 -> 12
+    (4096 buckets, ~49 occupancy, 0.3% probed)."""
     tbits = LSH_TARGET_BUCKET.bit_length() - 1
     return max(1, min(LSH_MAX_BITS, (max(n, 2) - 1).bit_length() - tbits))
 
 
-def _lsh_oracle() -> str:
-    """DuckDB replay of the SRP-LSH multiprobe ANN pipeline (the r8
-    evidence upgrade — VERDICT r7 #5): the LSH_BITS md5-derived ±1
-    hyperplanes inline as literals (same derivation the SRP dedup
-    oracle already replays), sign bits use the same round-6 guard, a
-    query probes its own bucket plus every ≤ LSH_MULTIPROBE-bit flip
-    (xor with the mask literals), and probed candidates re-rank by
-    exact 6-decimal-rounded cosine with the id tie-break."""
-    import itertools as _it
-
-    from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
-
-    dim = EMB_DIM
-    planes = _srp_planes(LSH_BITS, dim)
-    plane_lits = [
-        "[" + ",".join("1.0" if v > 0 else "-1.0" for v in row) + "]"
-        for row in planes
-    ]
-
-    def bit(j: int) -> str:
-        return (
-            f"(CASE WHEN round(list_sum(list_transform(range(1, {dim + 1}), "
-            f"i -> CAST(embedding[i] AS DOUBLE) * ({plane_lits[j]})[i])), 6) > 0 "
-            f"THEN 1 ELSE 0 END)"
-        )
-
-    bucket = " + ".join(f"{bit(j)} * {1 << j}" for j in range(LSH_BITS))
-    masks = [0] + [
-        sum(1 << j for j in combo)
-        for r in range(1, LSH_MULTIPROBE + 1)
-        for combo in _it.combinations(range(LSH_BITS), r)
-    ]
-    probe_list = ", ".join(f"xor(qb, {m})" for m in masks)
-    return f"""
-    WITH lbase AS (
-      SELECT vec_id, embedding,
-             sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))
-               AS nrm,
-             {bucket} AS bucket
-      FROM embeddings),
-    lq AS (SELECT vec_id AS q_id, embedding AS qe, nrm AS qn,
-                  bucket AS qb
-           FROM lbase WHERE vec_id % {QUERY_STRIDE} = 0),
-    lprobes AS (
-      SELECT q_id, qe, qn, unnest([{probe_list}]) AS bucket FROM lq),
-    lcand AS (
-      SELECT p.q_id, e.vec_id,
-             round(list_sum(list_transform(range(1, {dim + 1}),
-                      i -> CAST(p.qe[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))
-                   / (p.qn * e.nrm), 6) AS cosine
-      FROM lprobes p JOIN lbase e ON e.bucket = p.bucket
-      WHERE e.vec_id <> p.q_id),
-    lranked AS (
-      SELECT q_id, vec_id, cosine,
-             row_number() OVER (PARTITION BY q_id
-                                ORDER BY cosine DESC, vec_id) AS rnk
-      FROM lcand)
-    SELECT q_id, vec_id, cosine, rnk FROM lranked WHERE rnk <= {TOP_K}
-    """
-
-
-def _lsh_topk_multi(
-    spark: SparkSession,
-    sf_dir: str,
-    configs: list[tuple[str, int]],
-    k: int = TOP_K,
-    multiprobe: int = LSH_MULTIPROBE,
-) -> DataFrame:
-    """Several SRP-LSH ANN widths in ONE shared pass → labeled
-    ``(label, q_id, vec_id, score, rank)`` rows, per-label identical
-    to `simsearch_lsh_topk(n_bits=...)` per config (pinned in
-    tests/test_llm_ops.py) — the ANN twin of the dedup row's
-    `_srp_pairs_multi` fusion.
-
-    What the widths share: the sign projections, computed ONCE up to
-    max(bits) (plane j is the same md5 derivation at every width, so
-    a narrow config reads a prefix) — the HOF dot products are the
-    expensive part of the pipeline. Per-width bucket ids are cheap
-    integer folds over the shared bits; bucket rows carry a config
-    label so the single probe join never mixes widths; candidates
-    re-rank once through one window keyed by (label, q_id)."""
-    from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
-
-    emb = load_embeddings(spark, sf_dir)
-    max_bits = max(b for _, b in configs)
-    planes = _srp_planes(max_bits, EMB_DIM)
-
-    def _proj(j: int):
-        vec_d = as_double(F.col("embedding"))
-        plane = F.array(*[F.lit(v) for v in planes[j]])
-        return F.aggregate(
-            F.zip_with(vec_d, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bit_cols = [
-        F.when(F.round(_proj(j), 6) > 0, 1).otherwise(0).alias(f"b{j}")
-        for j in range(max_bits)
-    ]
-    # Buckets carry vec_id ONLY (the dedup fusion's shuffle
-    # discipline); embeddings rejoin at the candidate level.
-    sig = emb.select("vec_id", *bit_cols)
-    import itertools
-
-    bucket_arms, probe_arms = [], []
-    for label, n_bits in configs:
-        bucket = sum(F.col(f"b{j}") * (1 << j) for j in range(n_bits))
-        arm = sig.select(
-            F.lit(label).alias("label"), "vec_id", bucket.alias("bucket")
-        )
-        bucket_arms.append(arm)
-        flip_masks = [0] + [
-            sum(1 << j for j in combo)
-            for r in range(1, multiprobe + 1)
-            for combo in itertools.combinations(range(n_bits), r)
-        ]
-        probe_arms.append(
-            arm.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-                "label",
-                F.col("vec_id").alias("q_id"),
-                F.explode(
-                    F.array(
-                        *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in flip_masks]
-                    )
-                ).alias("bucket"),
-            )
-        )
-    buckets = bucket_arms[0]
-    for a in bucket_arms[1:]:
-        buckets = buckets.unionByName(a)
-    probes = probe_arms[0]
-    for a in probe_arms[1:]:
-        probes = probes.unionByName(a)
-    cand = probes.join(buckets, ["label", "bucket"]).filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    qe = emb.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    ce = emb.select("vec_id", "embedding", "nrm")
-    scored = (
-        cand.join(F.broadcast(qe), "q_id")
-        .join(ce, "vec_id")
-        .withColumn(
-            "score",
-            F.round(
-                dot(as_double(F.col("q_emb")), as_double(F.col("embedding")))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ),
-        )
-    )
-    w = W.partitionBy("label", "q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("label", "q_id", "vec_id", "score", "rank")
-    )
-
-
 def _lsh_adaptive_oracle() -> str:
-    """DuckDB replay of the ADAPTIVE-width SRP-LSH pipeline (r10 —
-    the 100x mitigation for the fixed-width lsh branch): all
+    """DuckDB replay of the ADAPTIVE-width SRP-LSH pipeline
+    (`simsearch_lsh_topk` at `lsh_adaptive_bits(n)`): all
     LSH_MAX_BITS md5 planes inline as VALUES rows (the fast-oracle
     shape — planes as DATA + one vectorized list_dot_product per
     (vector, plane)), every sign bit packs into one BIGINT, and the
@@ -1205,8 +966,7 @@ def _lsh_adaptive_oracle() -> str:
     """
 
 
-# sqrt-n centroid derivation for the adaptive IVF branch — same
-# assign/probe/rerank tail as the pinned-stride variants; the stride
+# sqrt-n centroid derivation for the adaptive IVF branch; the stride
 # comes from a scalar subquery computing the SAME ceil(sqrt(n)) as
 # ivf_adaptive_stride.
 _SQL_ADAPTIVE_CENTS = """,
@@ -1217,10 +977,10 @@ _SQL_ADAPTIVE_CENTS = """,
 
 
 def _sql_tail_adaptive_cal() -> str:
-    """The adaptive branch's tail with the r13 recall-calibrated
-    nprobe: the calibration CTEs replay `ivf_calibrate_nprobe` over
-    the same base/cents/assign, and the probe filter consumes the
-    derived scalar instead of the pinned literal."""
+    """The adaptive branch's tail with the recall-calibrated nprobe:
+    the calibration CTEs replay `ivf_calibrate_nprobe` over the same
+    base/cents/assign, and the probe filter consumes the derived
+    scalar."""
     return _sql_tail(
         nprobe_expr="(SELECT np FROM acalnp)",
         cal_block=_sql_calibration_ctes(
@@ -1261,21 +1021,22 @@ def _ivf_linear_oracle() -> str:
       family's u8 convention), and the SRP bucket width
       bits = max(1, bit_length(nlist-1) - 4) — each the integer-exact
       twin of the Python formula, so no libm boundary hazard;
-    - sampled pinned Lloyd: the kmeans arm's vec_id-sorted fold means,
-      but trained on the md5-sampled subset;
+    - sampled pinned Lloyd: vec_id-sorted fold means (the
+      `_lloyd_refine_pinned` order) over the md5-sampled subset;
     - SRP-bucket assign: all IVF_LIN_MAX_BITS planes as VALUES rows
       (the fast-oracle shape `_plane_values_sql` introduced), signature
       masked to the data-dependent bits, points probe their own bucket
       plus every 1-bit flip, exact argmax inside the probed buckets;
     - rescue: exact argmax over all centroids for points whose probed
       buckets held none — same unconditional-assignment contract;
-    - tail: NPROBE nearest lists per query, exact re-rank, TOP_K.
+    - tail: the calibrated nprobe nearest lists per query, exact
+      re-rank, TOP_K.
     """
     from hgn_spark.operators.dedup import EMB_DIM, _plane_values_sql, _srp_planes
 
     planes = _srp_planes(IVF_LIN_MAX_BITS, EMB_DIM)
-    # r13: the production nprobe is recall-calibrated on the built
-    # index (VERDICT r12 #1) — replay the sizing, not a literal.
+    # nprobe is recall-calibrated on the built index — replay the
+    # sizing, not a literal.
     cal_block = _sql_calibration_ctes(
         prefix="lcal",
         base="lbase",
@@ -1419,27 +1180,14 @@ def _ivf_linear_oracle() -> str:
 
 @register(
     "simsearch_topk_cosine",
-    # Deterministic end to end (stride-sampled centroids, one pinned
-    # Lloyd iteration for the kmeans branch, md5-derived SRP planes for
-    # the lsh branch, 6-decimal-rounded cosines before every window, id
-    # tie-breaks), so DuckDB replays every variant exactly — ANN with a
-    # hash-checked oracle, not just a recall bound. One driver row for
-    # the exact baseline, both IVF centroid strategies (the r7 window
-    # consolidation) AND the SRP-LSH multiprobe path (the r8 evidence
-    # upgrade) — driver coverage of every ANN variant the engine ships.
+    # Deterministic end to end (sqrt-n stride centroids, a pinned-fold
+    # Lloyd for the linear build, md5-derived SRP planes for the LSH
+    # and bucket-assign stages, 6-decimal-rounded cosines before every
+    # window, id tie-breaks), so DuckDB replays every variant exactly —
+    # ANN with a hash-checked oracle, not just a recall bound.
     oracle=(
         "SELECT 'exact' AS variant, * FROM ("
         + _SQL_EXACT
-        + ") UNION ALL SELECT 'seed' AS variant, * FROM ("
-        + _SQL_PRELUDE
-        + _SQL_SEED_CENTS
-        + _SQL_TAIL
-        + ") UNION ALL SELECT 'kmeans' AS variant, * FROM ("
-        + _SQL_PRELUDE
-        + _SQL_KMEANS_CENTS
-        + _SQL_TAIL
-        + ") UNION ALL SELECT 'lsh' AS variant, * FROM ("
-        + _lsh_oracle()
         + ") UNION ALL SELECT 'ivf_adaptive' AS variant, * FROM ("
         + _SQL_PRELUDE
         + _SQL_ADAPTIVE_CENTS
@@ -1453,67 +1201,45 @@ def _ivf_linear_oracle() -> str:
     tags=("similarity", "ann", "kmeans", "lsh"),
 )
 def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k cosine per standing query, all six strategies in one
-    driver row (`variant` column):
+    """Top-k cosine per standing query, the exact yardstick and the
+    three production ANN paths in one driver row (`variant` column):
 
-    - 'exact': brute-force scan — the baseline every ANN variant's
+    - 'exact': brute-force scan — the ground truth every ANN variant's
       recall is measured against (simsearch_exact_topk);
-    - 'seed': IVF with stride-sampled centroids — the headline
-      approximate configuration;
-    - 'kmeans': IVF with one deterministic Lloyd iteration over the
-      same seeds (see _lloyd_refine_pinned; production trains via the
-      avg-based lloyd_refine) — the trainable-centroid scale path for
-      corpora WITH cluster structure;
-    - 'lsh': SRP-LSH with 1-bit-flip multiprobe (simsearch_lsh_topk) —
-      the data-INDEPENDENT scale path (no training pass, bucket ids
-      stable under corpus growth; the recall tradeoff vs IVF is
-      measured and documented on that function);
-    - 'ivf_adaptive' (r10): IVF with sqrt-n centroids
-      (ivf_adaptive_stride) — the 100x probe measured the pinned
-      stride's n^2 assign step at 846.9x growth; this branch is the
-      shipped mitigation, hash-proven per scale against a
-      scalar-subquery stride;
-    - 'lsh_adaptive' (r10): occupancy-targeted SRP width
-      (lsh_adaptive_bits, integer-exact bit_length formula) — the
-      fixed width grew 74.2x at 100x data; at sf0.1 the formula
-      reproduces the pinned 5 bits exactly (boundary parity), at
-      sf0.01 it narrows to 3 and the branch provably diverges from
-      'lsh' (39 differing rows — non-vacuous; ivf_adaptive likewise
-      diverges from 'seed' at both driver scales);
-    - 'ivf_linear' (r12, VERDICT r11 #2): the linear-time index build
-      (ivf_build_linear — sampled pinned-Lloyd train + SRP-bucket
-      assign + exact rescue) under the same probe/rerank tail, so the
-      hash proves the production build topology, not just its query
-      path. Diverges from 'ivf_adaptive' wherever the bucket-local
-      argmax lands a vector in a near- rather than nearest list — the
-      approximation the build buys its 0.94x-per-3x-data growth with.
+    - 'ivf_adaptive': IVF with sqrt-n stride centroids
+      (ivf_adaptive_stride), exact argmax assign and recall-calibrated
+      nprobe; hash-proven per scale against a scalar-subquery stride;
+    - 'lsh_adaptive': SRP-LSH at the occupancy-targeted width
+      (simsearch_lsh_topk at lsh_adaptive_bits, integer-exact
+      bit_length formula);
+    - 'ivf_linear': the linear-time index build (ivf_build_linear —
+      sampled pinned-Lloyd train + SRP-bucket assign + exact rescue)
+      under the same calibrated probe/rerank tail, so the hash proves
+      the production build topology, not just its query path. Diverges
+      from 'ivf_adaptive' wherever the bucket-local argmax lands a
+      vector in a near- rather than nearest list — the approximation
+      the build buys its 0.94x-per-3x-data growth with.
 
     The ANN branches are approximate relative to 'exact' (a true
     neighbor can live in an unprobed list/bucket — recall asserted in
     tests/test_llm_ops), but REPRODUCIBLE: every ranking uses
     6-decimal-rounded cosines with id tie-breaks, so the DuckDB oracle
     replays all four pipelines exactly and the driver hash-checks them.
-
-    On the synthetic isotropic testdata the kmeans branch measures
-    slightly below the seed branch (0.92 vs 0.96 recall at sf0.01,
-    equal probed candidate count; mean same-label cosine ≈ 0.002 means
-    there is no cluster structure to learn) — the expected no-structure
-    outcome, documented rather than hidden.
+    The fixed-stride IVF and fixed-width LSH variants these replace
+    grew 846.9x and 74.2x at 100x data (PROBE_100x_heavy_r10).
     """
-    # r14 OPTIMIZATION (guide §2.6 — overlap independent jobs): the
-    # row's construction runs ~9 driver-BLOCKING operations (three
-    # loose checkpoints, two recall calibrations, the linear build's
-    # two internal checkpoints, plus lazy analysis), and the three
-    # index chains (stride-seed, sqrt-n adaptive, linear build) are
-    # mutually independent — nothing in one reads another's frames.
-    # Submitting them from a small thread pool lets each chain's jobs
-    # back-fill the executor idle time of another's driver round-trips:
-    # measured 8.0 s -> ~5.5 s for the row at sf0.1 with identical
-    # results (every chain is deterministic on its own inputs; job
-    # descriptions are thread-local; all checkpoints here are LOOSE,
-    # i.e. parked in one shared store, so concurrent id-diff attribution
-    # cannot mis-release a block). The same overlap holds on a cluster:
-    # a sqrt(n)-row calibration never fills it, so the other chains'
+    # The row's construction runs several driver-BLOCKING operations
+    # (loose checkpoints, two recall calibrations, the linear build's
+    # internal checkpoints, plus lazy analysis), and the index chains
+    # (sqrt-n adaptive, linear build, LSH) are mutually independent —
+    # nothing in one reads another's frames. Submitting them from a
+    # small thread pool lets each chain's jobs back-fill the executor
+    # idle time of another's driver round-trips, with identical results
+    # (every chain is deterministic on its own inputs; job descriptions
+    # are thread-local; all checkpoints here are LOOSE, i.e. parked in
+    # one shared store, so concurrent id-diff attribution cannot
+    # mis-release a block). The same overlap holds on a cluster: a
+    # sqrt(n)-row calibration never fills it, so the other chains'
     # scans run in the gap.
     from concurrent.futures import ThreadPoolExecutor
 
@@ -1527,46 +1253,26 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = emb_count(spark, sf_dir)
 
     def _chain_truth():
-        # Shared calibration truth (r14): the exact top-k of the
-        # calibration sample is a pure function of the CORPUS, so the
-        # adaptive and linear chains' calibrations — which each paid
-        # the O(m*n) scan — now read one materialized (m*k)-row frame.
-        # Submitted FIRST so it is running before any chain blocks on
-        # it (the pool is sized to hold every task anyway).
-        # r15 (VERDICT r14 #4, guide §2.3): the calibration QUERY
-        # sample is corpus-pure too — materialize it once (~m rows)
-        # and hand it to the truth and both branch calibrations, so
-        # the salted-md5 corpus filter runs once instead of three
-        # times (each evaluation is a full corpus scan at 100 TB).
+        # The exact top-k of the calibration sample is a pure function
+        # of the CORPUS, so both IVF chains' calibrations read one
+        # materialized (m*k)-row frame instead of each paying the
+        # O(m*n) scan. The calibration QUERY sample is corpus-pure too
+        # — materialize it once (~m rows) so the salted-md5 corpus
+        # filter runs once, not once per consumer. Submitted FIRST so
+        # it is running before any chain blocks on it.
         emb = load_embeddings(spark, sf_dir)
         calq = loose_local_checkpoint(
             _calibration_queries(emb, n, CAL_QUERY_TARGET)
         )
         return calq, loose_local_checkpoint(calibration_truth(emb, n, calq=calq))
 
-    def _chain_seed():
-        # Both IVF variants share the seed-assignment frame,
-        # materialized once: the seed variant's inverted lists and the
-        # kmeans variant's Lloyd input are the same broadcast-argmax
-        # pass, and a lazy union would re-run it per branch (Catalyst
-        # shares no subplans across union arms).
-        emb, seeds, seed_assign = _ivf_seed_frames(spark, sf_dir)
-        return emb, seeds, loose_local_checkpoint(seed_assign)
-
     def _chain_adaptive():
-        # The r10 scale-mitigation branch (100x probe: fixed-stride
-        # IVF 846.9x growth). Sizing is data-dependent (sqrt-n
-        # centroids), so the driver hash proves the adaptive formula
-        # bit-agrees with the oracle's scalar-subquery twin at every
-        # driver scale.
         a_emb, a_cents, a_assign = _ivf_seed_frames_adaptive(spark, sf_dir, n=n)
         # The assignment feeds TWO consumers (the calibration's
         # home-list lookup and the query candidates) — materialize once.
         a_assign = loose_local_checkpoint(a_assign)
-        # r13 (VERDICT r12 #1): the production branches size nprobe
-        # from the measured recall curve of THIS index instead of the
-        # pinned literal whose recall the r12 sweep showed decaying
-        # with n.
+        # nprobe is sized from the measured recall curve of THIS index:
+        # nlist ~ sqrt(n), so any fixed nprobe's recall decays with n.
         calq, truth = f_truth.result()
         np_a = ivf_calibrate_nprobe(
             a_emb, a_cents, a_assign, n, truth=truth, calq=calq
@@ -1574,16 +1280,12 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         return a_emb, a_cents, a_assign, np_a
 
     def _chain_linear():
-        # r12 (VERDICT r11 #2): the LINEAR-TIME index build — the
-        # stated 100 TB build path (sampled Lloyd + SRP-bucket-local
-        # assign + exact-argmax rescue, PROBE_ivf_build 0.94x growth
-        # per 3x data vs 4.68x for the exact assign) — as a
-        # driver-hashed branch instead of tests-only coverage.
-        # pinned=True swaps in the fold-order-pinned Lloyd so DuckDB
-        # replays the training bit-exactly; the driver-scale sample
-        # floor keeps the md5 sample non-vacuous (see ivf_build_linear's
-        # docstring). Same probe/rerank tail, so the branch differs
-        # from ivf_adaptive exactly by the build topology under test.
+        # The linear-time index build (sampled Lloyd + SRP-bucket-local
+        # assign + exact-argmax rescue, PROBE_ivf_build 0.94x growth per
+        # 3x data vs 4.68x for the exact assign). pinned=True swaps in
+        # the fold-order-pinned Lloyd so DuckDB replays the training
+        # bit-exactly; the driver-scale sample floor keeps the md5
+        # sample non-vacuous (see ivf_build_linear's docstring).
         l_emb, l_cents, l_assign = ivf_build_linear(
             spark,
             sf_dir,
@@ -1591,14 +1293,12 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             pinned=True,
             sample_floor=IVF_LINEAR_DRIVER_FLOOR,
         )
-        # No caller-side checkpoint here (r14): unlike the adaptive
-        # branch — whose assignment is the expensive full argmax —
-        # the linear build already materialized `matched` internally,
-        # and the assign frame on top of it is just the rescue
-        # anti-join + argmax over the (checkpointed, sqrt-n) centroid
-        # table, bounded small by construction. Letting the two
-        # consumers (calibration + query) recompute that tail costs
-        # less than another eager checkpoint barrier.
+        # No caller-side checkpoint here: the linear build already
+        # materialized `matched` internally, and the assign frame on
+        # top of it is just the rescue anti-join + argmax over the
+        # (checkpointed, sqrt-n) centroid table, bounded small by
+        # construction. Letting the two consumers (calibration + query)
+        # recompute that tail costs less than another eager barrier.
         calq, truth = f_truth.result()
         np_l = ivf_calibrate_nprobe(
             l_emb, l_cents, l_assign, n, truth=truth, calq=calq
@@ -1606,81 +1306,33 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         return l_emb, l_cents, l_assign, np_l
 
     def _chain_lsh():
-        # Both LSH widths run FUSED in one shared pass (projections
-        # computed once to max(bits), labeled buckets, one probe join /
-        # re-rank) — per-label identical to simsearch_lsh_topk, pinned
-        # in tests/test_llm_ops.py; the _srp_pairs_multi discipline.
         # No blocking action, but the plan ANALYSIS is py4j-bound and
         # overlaps the other chains' jobs.
-        return _lsh_topk_multi(
-            spark,
-            sf_dir,
-            [("lsh", LSH_BITS), ("lsh_adaptive", lsh_adaptive_bits(n))],
-        )
+        return simsearch_lsh_topk(spark, sf_dir, n_bits=lsh_adaptive_bits(n))
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with ThreadPoolExecutor(max_workers=4) as pool:
         f_truth = pool.submit(_chain_truth)
-        f_seed = pool.submit(_chain_seed)
         f_adaptive = pool.submit(_chain_adaptive)
         f_linear = pool.submit(_chain_linear)
         f_lsh = pool.submit(_chain_lsh)
-        frames = f_seed.result()
         a_emb, a_cents, a_assign, np_a = f_adaptive.result()
         l_emb, l_cents, l_assign, np_l = f_linear.result()
         lsh_frame = f_lsh.result()
 
-    seed = _ivf_query(spark, sf_dir, refine=False, frames=frames).select(
-        F.lit("seed").alias("variant"), "*"
+    ivf_a = _ivf_query((a_emb, a_cents, a_assign), nprobe=np_a).select(
+        F.lit("ivf_adaptive").alias("variant"), "*"
     )
-    km = _ivf_query(spark, sf_dir, refine=True, frames=frames).select(
-        F.lit("kmeans").alias("variant"), "*"
+    ivf_lin = _ivf_query((l_emb, l_cents, l_assign), nprobe=np_l).select(
+        F.lit("ivf_linear").alias("variant"), "*"
     )
-    ivf_a = _ivf_query(
-        spark, sf_dir, refine=False, frames=(a_emb, a_cents, a_assign), nprobe=np_a
-    ).select(F.lit("ivf_adaptive").alias("variant"), "*")
-    ivf_lin = _ivf_query(
-        spark, sf_dir, refine=False, frames=(l_emb, l_cents, l_assign), nprobe=np_l
-    ).select(F.lit("ivf_linear").alias("variant"), "*")
-    lsh_both = lsh_frame.select(
-        F.col("label").alias("variant"),
+    lsh_a = lsh_frame.select(
+        F.lit("lsh_adaptive").alias("variant"),
         "q_id",
         "vec_id",
         F.col("score").alias("cosine"),
         F.col("rank").alias("rnk"),
     )
-    return (
-        exact.unionByName(seed)
-        .unionByName(km)
-        .unionByName(ivf_a)
-        .unionByName(lsh_both)
-        .unionByName(ivf_lin)
-    )
-
-
-def simsearch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both IVF variants (seed + kmeans) without the exact baseline —
-    the pre-merge `simsearch_ivf_topk` driver row, kept callable for
-    tests and API compatibility."""
-    emb, seeds, seed_assign = _ivf_seed_frames(spark, sf_dir)
-    seed_assign = loose_local_checkpoint(seed_assign)
-    frames = (emb, seeds, seed_assign)
-    seed = _ivf_query(spark, sf_dir, refine=False, frames=frames).select(
-        F.lit("seed").alias("variant"), "*"
-    )
-    km = _ivf_query(spark, sf_dir, refine=True, frames=frames).select(
-        F.lit("kmeans").alias("variant"), "*"
-    )
-    return seed.unionByName(km)
-
-
-def simsearch_ivf_seed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with stride-sampled centroids (the 'seed' variant)."""
-    return _ivf_query(spark, sf_dir, refine=False)
-
-
-def simsearch_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with k-means-trained centroids (the 'kmeans' variant)."""
-    return _ivf_query(spark, sf_dir, refine=True)
+    return exact.unionByName(ivf_a).unionByName(lsh_a).unionByName(ivf_lin)
 
 
 def simsearch_ivf_calibrated_topk(
@@ -1708,9 +1360,7 @@ def simsearch_ivf_calibrated_topk(
     if info is not None:
         info["nprobe"] = np_c
         info["n"] = n
-    return _ivf_query(
-        spark, sf_dir, refine=False, frames=(emb, cents, assign), nprobe=np_c
-    )
+    return _ivf_query((emb, cents, assign), nprobe=np_c)
 
 
 @register(
@@ -1777,14 +1427,17 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simsearch_lsh_topk(
     spark: SparkSession,
     sf_dir: str,
-    n_bits: int = LSH_BITS,
+    n_bits: int | None = None,
     k: int = TOP_K,
     multiprobe: int = LSH_MULTIPROBE,
 ) -> DataFrame:
     """LSH-bucketed ANN top-k — the hash-partitioned alternative to the
     IVF scale path: corpus vectors land in 2^n_bits signed-random-
     projection buckets (deterministic md5 planes shared with the SRP
-    dedup sketch), a query probes its own bucket plus every bucket
+    dedup sketch; ``n_bits`` defaults to the occupancy-targeted
+    `lsh_adaptive_bits` of the corpus size, which keeps expected
+    bucket size near LSH_TARGET_BUCKET as the corpus grows), a query
+    probes its own bucket plus every bucket
     within ``multiprobe`` bit flips (SRP sign bits flip most easily
     where the projection is near zero, which is exactly where true
     neighbors land across the plane), and probed candidates re-rank by
@@ -1799,17 +1452,18 @@ def simsearch_lsh_topk(
 
     Honest tradeoff, measured on this corpus (sf0.01, top-5): SRP-LSH
     is data-INDEPENDENT — no training pass, composable with streaming
-    ingest, bucket ids stable under corpus growth — but that is exactly
-    why its recall trails trained IVF at equal probe volume on a
-    corpus without tight neighbor structure (max pair cosine ~0.48):
-    0.36 recall at ~19% probed (5 bits) vs IVF's 0.96 at ~15%. Use LSH
-    when neighbors are CLOSE (the dedup regime, cosine ≥ 0.8+, where
-    the SRP near-dup sketch already operates) or when a training pass
-    is impossible; use IVF when you can afford to learn centroids.
+    ingest — but that is exactly why its recall trails trained IVF at
+    equal probe volume on a corpus without tight neighbor structure
+    (max pair cosine ~0.48): 0.36 recall at ~19% probed (5 bits). Use
+    LSH when neighbors are CLOSE (the dedup regime, cosine ≥ 0.8+,
+    where the SRP near-dup sketch already operates) or when a training
+    pass is impossible; use IVF when you can afford to learn centroids.
     """
     from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
 
     emb = load_embeddings(spark, sf_dir)
+    if n_bits is None:
+        n_bits = lsh_adaptive_bits(emb_count(spark, sf_dir))
     planes = _srp_planes(n_bits, EMB_DIM)
 
     def _proj(j: int):

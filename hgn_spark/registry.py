@@ -112,6 +112,38 @@ def load_all() -> dict[str, QuerySpec]:
 _SESSION_CACHES: list[tuple[str, tuple[dict, ...], dict | None]] = []
 
 
+def _table_cache_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
+    """Session-cache key for a frame derived from ``table`` under
+    ``sf_dir``: ``(applicationId, sf_dir, fingerprint)``.
+
+    The fingerprint is the sorted (path, length, modification time)
+    listing of every file under the table path, read through the
+    Hadoop ``FileSystem`` API so remote URIs work as well as local
+    paths. Rewriting or appending files under the path in the same
+    session changes the key, so a cache built from the old files is
+    never served for the new ones. Element 0 stays the applicationId,
+    as `_block_key_app` requires. The listing is metadata only and
+    starts no Spark job."""
+    import os
+
+    jvm = spark.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path(os.path.join(sf_dir, f"{table}.parquet"))
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    listing = []
+    # listStatus walked by hand: listFiles(recursive) also fetches block
+    # locations per file, which costs ~4x the py4j time for nothing here.
+    pending = [path] if fs.exists(path) else []
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            if st.isDirectory():
+                pending.append(st.getPath())
+            else:
+                listing.append(
+                    (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                )
+    return (spark.sparkContext.applicationId, sf_dir, tuple(sorted(listing)))
+
+
 def _block_key_app(key) -> str | None:
     """The applicationId a block-id store key belongs to: tuple keys
     carry it in element 0, plain keys ARE it (module comment above)."""

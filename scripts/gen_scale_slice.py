@@ -102,8 +102,9 @@ def replicate_documents(df: DataFrame, k: int) -> DataFrame:
 
 def replicate_embeddings(df: DataFrame, k: int) -> DataFrame:
     """Replicate embeddings with vec_id offsets that are multiples of 50
-    (lcm of QUERY_STRIDE 50 and CENTROID_STRIDE 25), so every replica
-    contributes an isomorphic query/centroid population. Each replica's
+    (QUERY_STRIDE, and a multiple of the stride-25 centroids earlier
+    IVF variants used), so every replica contributes an isomorphic
+    query population. Each replica's
     vectors are circularly dim-rotated by the replica index: norms and
     all INTRA-replica cosines are preserved exactly (the replica keeps
     sf0.1's similarity structure), while cross-replica cosines are

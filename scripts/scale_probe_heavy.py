@@ -12,18 +12,18 @@ Scope — exactly the rows r9's judge listed as still topping out at
   100 TB ingestion path (the r9 100x probe ran incremental uncapped:
   315.8 s / 100.9x growth; the claim under test is that the capped
   composition holds at-or-below the capped whole-corpus 24.7-26.2x).
-- ``minhash_lsh`` / ``simhash``: the two sketch branches the r9 probe
-  skipped (SRP was probed; these share the band/chunk bucket-join
-  shape so the expectation is linear-or-better).
-- ``simsearch_row``: the full 4-variant ANN row. NOTE the row's
-  'exact' branch is structurally quadratic at fixed query stride
-  (queries grow with the corpus x a full scan each); it exists as the
-  recall baseline, not the scale path, so its growth is reported but
-  the scale claim rides on the IVF/LSH fractions below.
-- ``ivf_seed_probe``: the IVF seed-variant pipeline alone (centroid
-  assign + probed lists + exact re-rank) — the production ANN path.
-- ``lsh_multiprobe``: the SRP-LSH multiprobe pipeline alone — the
-  data-independent ANN path.
+- ``minhash_lsh`` / ``simhash_manku``: the minhash and simhash sketch
+  paths (band / combination-key bucket joins; the expectation is
+  linear-or-better).
+- ``simsearch_row``: the full ANN row. NOTE the row's 'exact' branch
+  is structurally quadratic at fixed query stride (queries grow with
+  the corpus x a full scan each); it exists as the recall ground
+  truth, not the scale path, so its growth is reported but the scale
+  claim rides on the IVF/LSH pipelines below.
+- ``ivf_adaptive_probe``: the sqrt-n-centroid IVF pipeline alone
+  (centroid assign + probed lists + exact re-rank).
+- ``lsh_adaptive_multiprobe``: the occupancy-targeted SRP-LSH
+  multiprobe pipeline alone — the data-independent ANN path.
 - ``pagerank_row`` / ``lpa_row``: fixed-round iterative graph rows
   (work per round is one bucket join + agg — expected linear in
   edges).
@@ -61,8 +61,6 @@ def main() -> None:
     from hgn_spark import registry
     from hgn_spark.operators.dedup import (
         CAP_DF,
-        SIMHASH_CAP,
-        dedup_embedding_neardup_pairs_adaptive,
         dedup_simhash_pairs,
         minhash_lsh_pairs,
         neardup_incremental,
@@ -71,8 +69,6 @@ def main() -> None:
     from hgn_spark.operators.similarity import (
         _ivf_query,
         _ivf_seed_frames_adaptive,
-        load_embeddings,
-        lsh_adaptive_bits,
         simsearch_lsh_topk,
     )
     from hgn_spark.registry import clear_session_caches
@@ -84,37 +80,25 @@ def main() -> None:
             s, d, df_cap=CAP_DF
         ),
         "minhash_lsh": minhash_lsh_pairs,
-        "simhash": dedup_simhash_pairs,
-        "ivf_seed_probe": lambda s, d: _ivf_query(s, d, refine=False),
-        "lsh_multiprobe": lambda s, d: simsearch_lsh_topk(s, d),
         "pagerank_row": rows["graph_pagerank"].fn,
         "lpa_row": rows["graph_label_propagation"].fn,
         "hgn_row": rows["hgn_communities"].fn,
-        # r10 mitigations for the superlinear findings of this probe's
-        # first run (ivf fixed-stride 846.9x, lsh fixed-width 74.2x,
-        # simhash fixed-chunk-space 42.7x)
+        # The scale paths that replaced this probe's first-run
+        # superlinear findings (fixed-stride IVF 846.9x, fixed-width
+        # LSH 74.2x, 12-bit simhash chunk keys 42.7x).
         "ivf_adaptive_probe": lambda s, d: _ivf_query(
-            s, d, refine=False, frames=_ivf_seed_frames_adaptive(s, d)
+            _ivf_seed_frames_adaptive(s, d)
         ),
-        "lsh_adaptive_multiprobe": lambda s, d: simsearch_lsh_topk(
-            s, d, n_bits=lsh_adaptive_bits(load_embeddings(s, d).count())
-        ),
-        "simhash_cap": lambda s, d: dedup_simhash_pairs(
-            s, d, bucket_cap=SIMHASH_CAP
-        ),
-        # r11 production simhash keying: Manku combination buckets
-        # (2^24 key space; result-identical to `simhash`); expected
-        # at-or-below-linear growth where the chunk scheme hit 42.7x.
-        "simhash_manku": lambda s, d: dedup_simhash_pairs(
-            s, d, scheme="combo"
-        ),
-        # whole-corpus guard twins (also in scale_probe_targeted.py) —
+        "lsh_adaptive_multiprobe": simsearch_lsh_topk,
+        # Manku combination buckets (2^24 key space); expected
+        # at-or-below-linear growth.
+        "simhash_manku": dedup_simhash_pairs,
+        # whole-corpus guard twin (also in scale_probe_targeted.py) —
         # here so ONE `only` filter can sweep every shipped guard at a
-        # deeper slice (the 300x tier, r10)
+        # deeper slice (the 300x tier)
         f"jaccard_cap_df{CAP_DF}": lambda s, d: ngram_jaccard_pairs_capped(
             s, d, df_cap=CAP_DF
         ),
-        "srp_adaptive_bits": dedup_embedding_neardup_pairs_adaptive,
         # quadratic-by-design exact branch inside — runs last so a
         # blowup is recorded as its own timeout, not a probe hang
         "simsearch_row": rows["simsearch_topk_cosine"].fn,
@@ -123,19 +107,18 @@ def main() -> None:
         only = set(sys.argv[3].split(","))
         variants = {k: v for k, v in variants.items() if k in only}
     else:
-        # Branch-role gate (VERDICT r10 #4): composite rows that union
-        # baseline-for-evidence branches with production ones measure
-        # the DELIBERATE scale-killers, not the engine (simsearch_row
-        # at 100x: 3118 s, dominated by exact+seed+kmeans). The default
-        # sweep skips them; name one explicitly in the `only` arg to
-        # probe it anyway.
+        # Branch-role gate: composite rows that union a ground-truth
+        # yardstick with production branches measure the quadratic
+        # exact scan, not the engine's scale path. The default sweep
+        # skips them; name one explicitly in the `only` arg to probe
+        # it anyway.
         from hgn_spark.branches import COMPOSITE_SCALE_UNSAFE
 
         for name, row in COMPOSITE_SCALE_UNSAFE.items():
             if name in variants:
                 print(
                     f"# skipping {name}: composite of row '{row}' carries "
-                    "baseline-for-evidence branches (see "
+                    "ground-truth branches (see "
                     "hgn_spark/branches.py); pass it in the only-list to "
                     "probe deliberately",
                     file=sys.stderr,

@@ -96,9 +96,7 @@ def main() -> None:
             for nprobe in (3, 8, 16, 32):
                 t0 = time.perf_counter()
                 got = _collect_topk(
-                    _ivf_query(
-                        spark, sf_dir, refine=False, frames=frames, nprobe=nprobe
-                    )
+                    _ivf_query(frames, nprobe=nprobe)
                 )
                 t_query = round(time.perf_counter() - t0, 2)
                 res[name][f"nprobe{nprobe}"] = {

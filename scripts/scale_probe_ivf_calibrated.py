@@ -121,12 +121,7 @@ def main() -> None:
             t0 = time.perf_counter()
             got = _collect_topk(
                 _ivf_query(
-                    spark,
-                    sf_dir,
-                    refine=False,
-                    frames=(emb, cents, assign),
-                    nprobe=np_c,
-                    query_stride=stride,
+                    (emb, cents, assign), nprobe=np_c, query_stride=stride
                 )
             )
             t_query = round(time.perf_counter() - t0, 2)

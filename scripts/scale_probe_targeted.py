@@ -1,19 +1,15 @@
-"""Targeted 100x probe (VERDICT r8 #5): time ONLY the two operator
-families whose pre-mitigation growth was above-linear — the n-gram
-jaccard family (whole-corpus / df-capped / incremental) and the SRP
-sketch family (pinned 16-bit / adaptive-bits / bucket-capped) — at
+"""Targeted 100x probe: time the n-gram jaccard family (whole-corpus /
+df-capped / incremental), whose uncapped growth was above-linear, at
 sf0.1 and at a k-fold replica slice (scripts/gen_scale_slice.py; the
 100x slice is /tmp/hgn_scale/sf10).
 
-The claim under test: the GUARD variants (df_cap, adaptive bits,
-bucket_cap) hold the linear term at 100x where the unguarded ones do
-not. The fixed-16-bit SRP sketch has a structural ~n^2/2^bits
-candidate term (band space fixed at 2x256 buckets), so at 200k
-vectors it is expected to be catastrophically slow — it runs LAST
-under PER_VARIANT_TIMEOUT so a blowup is recorded as a timeout
-instead of hanging the probe. Session caches are cleared before
-every timed run: each variant pays its own index/signature build,
-the single-query production cost.
+The claim under test: the df_cap guard holds the linear term at 100x
+where the uncapped path does not. Session caches are cleared before
+every timed run: each variant pays its own index/signature build, the
+single-query production cost. (The SRP sketch variants this probe
+also timed were retired; their numbers stay in the committed
+PROBE_*.json files, and the production SRP sizing is probed by
+scripts/srp_operating_point_100x.py.)
 
 Usage: python scripts/scale_probe_targeted.py [scaled_dir] [runs]
 """
@@ -37,8 +33,6 @@ def main() -> None:
 
     from hgn_spark.operators.dedup import (
         CAP_DF,
-        dedup_embedding_neardup_pairs,
-        dedup_embedding_neardup_pairs_adaptive,
         dedup_ngram_jaccard_pairs,
         neardup_incremental,
         ngram_jaccard_pairs_capped,
@@ -64,14 +58,6 @@ def main() -> None:
             s, d, df_cap=CAP_DF
         ),
         "jaccard_incremental": lambda s, d: neardup_incremental(s, d),
-        "srp_adaptive_bits": lambda s, d: dedup_embedding_neardup_pairs_adaptive(
-            s, d
-        ),
-        "srp_bucket_cap64": lambda s, d: dedup_embedding_neardup_pairs(
-            s, d, bucket_cap=64
-        ),
-        # structurally superlinear — runs last, may time out by design
-        "srp_fixed16": lambda s, d: dedup_embedding_neardup_pairs(s, d),
     }
 
     out: dict[str, dict[str, float | str]] = {}

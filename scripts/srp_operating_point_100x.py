@@ -1,7 +1,6 @@
 """Focused 100x extension of the srp operating-point measurement
-(PROBE_recall_r12 covers sf0.1/10x/30x): recall of `srp_recall` (and
-`srp_adaptive` for contrast) in the cos>=0.85 strata on a 200k-vector
-hicos corpus.
+(PROBE_recall_r12 covers sf0.1/10x/30x): recall of `srp_recall` in
+the cos>=0.85 strata on a 200k-vector hicos corpus.
 
 Truth at this scale is computed EXACTLY but restricted: a cos>=0.85
 pair must involve a planted companion. Why that restriction is sound
@@ -99,7 +98,6 @@ def main() -> None:
     t_truth = round(time.perf_counter() - t0, 2)
 
     from hgn_spark.operators.dedup import (
-        dedup_embedding_neardup_pairs_adaptive,
         dedup_embedding_neardup_pairs_recall,
         srp_recall_bands,
     )
@@ -124,10 +122,6 @@ def main() -> None:
     }
     for name, fn in (
         ("srp_recall", lambda: dedup_embedding_neardup_pairs_recall(spark, sf_dir)),
-        (
-            "srp_adaptive",
-            lambda: dedup_embedding_neardup_pairs_adaptive(spark, sf_dir),
-        ),
     ):
         clear_session_caches(blocking=True)
         t0 = time.perf_counter()

@@ -11,14 +11,8 @@ Per scale:
     running the Spark uncapped exact-jaccard path and asserting it
     returns exactly the planted set — which also measures what the
     uncapped inverted index COSTS on mega-buckets);
-  - `minhash_lsh_pairs`: pinned 16-perm/4-band sketch — per-stratum
-    recall (banded collision probability is jaccard-dependent:
-    expected ~0.90 / 0.99 / 1.0 at J ≈ 0.815 / 0.90 / 0.95), DEMOTED
-    r14 after this probe's r13 run measured 0.83-0.86 in the J>=0.8
-    stratum — ~0.875 at the threshold is the sketch's own S-curve
-    ceiling, not noise;
-  - `minhash_recall` (r14, VERDICT r13 #2 / what's-wrong #1): the
-    recall-SIZED sketch — `minhash_recall_perms(J=0.8, R=0.95)` solves
+  - `minhash_recall` (`minhash_lsh_pairs`): the recall-SIZED sketch —
+    `minhash_recall_perms(J=0.8, R=0.95)` solves
     the band count for the stated operating point (24 perms / 6 bands,
     expected 1-(1-0.8^4)^6 ≈ 0.958 at the threshold itself). The pass
     bar: recall >= 0.95 in the J>=0.80 stratum at BOTH scales
@@ -63,9 +57,7 @@ def main() -> None:
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
 
     from hgn_spark.operators.dedup import (
-        BANDS,
         JACCARD_THRES,
-        NUM_PERM,
         PRODUCTION_CAP_DF,
         choose_jaccard_path,
         dedup_ngram_jaccard_pairs,
@@ -81,8 +73,6 @@ def main() -> None:
     out: dict = {
         "probe": "text_clustered_recall_r14",
         "knob": {
-            "num_perm": NUM_PERM,
-            "bands": BANDS,
             "df_cap": PRODUCTION_CAP_DF,
             "sized_num_perm": sized_perm,
             "sized_bands": sized_bands,
@@ -124,13 +114,7 @@ def main() -> None:
             }
             first = False
         for name, fn in (
-            ("minhash", lambda: minhash_lsh_pairs(spark, sf_dir)),
-            (
-                "minhash_recall",
-                lambda: minhash_lsh_pairs(
-                    spark, sf_dir, num_perm=sized_perm, bands=sized_bands
-                ),
-            ),
+            ("minhash_recall", lambda: minhash_lsh_pairs(spark, sf_dir)),
             (
                 "jaccard_capped_auto",
                 lambda: ngram_jaccard_pairs_auto(

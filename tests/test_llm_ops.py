@@ -35,26 +35,29 @@ def test_minhash_lsh_subset_and_recall(spark, exact_pairs):
     }
     # Verified pairs can only be a subset of the exact-jaccard pairs...
     assert got <= exact_pairs
-    # ...and the 4x4 sketch should catch nearly all of them (p≈0.99 at
-    # j=0.89; 26/28 observed).
-    assert len(got) / len(exact_pairs) >= 0.8
+    # ...and the recall-sized sketch (24 perms / 6 bands, expected
+    # 0.958 at the 0.8 threshold itself, higher above it) should catch
+    # nearly all of them.
+    assert len(got) / len(exact_pairs) >= 0.9
 
 
 def test_minhash_candidates_much_smaller_than_n_squared(spark):
-    """The LSH property that matters at 100 TB: candidate pairs ≪ n²."""
+    """The LSH property that matters at 100 TB: candidate pairs ≪ n²,
+    at the production `minhash_recall_perms` sizing."""
     from pyspark.sql import functions as F
 
     from hgn_spark.operators import dedup
 
     n_docs = 500
+    num_perm, n_bands = dedup.minhash_recall_perms()
     sh = dedup._shingle_index(spark, SF_SMOKE)
     sig = sh.groupBy("doc_id").agg(
         *[
             F.min(F.xxhash64(F.lit(p), F.col("s"))).alias(f"mh{p}")
-            for p in range(dedup.NUM_PERM)
+            for p in range(num_perm)
         ]
     )
-    rows = dedup.NUM_PERM // dedup.BANDS
+    rows = num_perm // n_bands
     bands = sig.select(
         "doc_id",
         F.explode(
@@ -66,7 +69,7 @@ def test_minhash_candidates_much_smaller_than_n_squared(spark):
                             *[F.col(f"mh{b * rows + r}") for r in range(rows)]
                         ).alias("bh"),
                     )
-                    for b in range(dedup.BANDS)
+                    for b in range(n_bands)
                 ]
             )
         ).alias("bb"),
@@ -88,25 +91,25 @@ def test_minhash_candidates_much_smaller_than_n_squared(spark):
 
 
 def test_minhash_signature_matches_aggregate_form(spark):
-    """The scan-side array-fold signature must equal the groupBy(min)
-    formulation it replaced (same permutation hashes, same minima)."""
+    """The scan-side array-fold signature minhash_lsh_pairs bands must
+    equal the groupBy(min) formulation (same permutation hashes, same
+    minima), at the production sizing."""
     from pyspark.sql import functions as F
 
     from hgn_spark.operators import dedup
 
+    num_perm, _ = dedup.minhash_recall_perms()
+    consts = dedup._minhash_consts(num_perm)
     sets_ = dedup._doc_shingle_sets(spark, SF_SMOKE)
     new = {
-        r["doc_id"]: tuple(r[f"mh{p}"] for p in range(dedup.NUM_PERM))
+        r["doc_id"]: tuple(r["mh"])
         for r in sets_.filter(F.col("sz") > 0)
-        .select(
-            "doc_id",
-            *[dedup._perm_min(p).alias(f"mh{p}") for p in range(dedup.NUM_PERM)],
-        )
+        .select("doc_id", dedup._minhash_signature(consts).alias("mh"))
         .collect()
     }
     sh = dedup._hashed_shingle_index(spark, SF_SMOKE)
     old = {
-        r["doc_id"]: tuple(r[f"mh{p}"] for p in range(dedup.NUM_PERM))
+        r["doc_id"]: tuple(r[f"mh{p}"] for p in range(num_perm))
         for r in sh.groupBy("doc_id")
         .agg(
             *[
@@ -114,7 +117,7 @@ def test_minhash_signature_matches_aggregate_form(spark):
                     ((F.col("h") % F.lit(dedup._MINHASH_P)) * F.lit(a) + F.lit(b))
                     % F.lit(dedup._MINHASH_P)
                 ).alias(f"mh{p}")
-                for p, (a, b) in enumerate(dedup._PERM_CONSTS)
+                for p, (a, b) in enumerate(consts)
             ]
         )
         .collect()
@@ -227,11 +230,11 @@ def test_embedding_neardup_subset_of_bruteforce(spark):
     from hgn_spark.operators.dedup import EMB_COS_THRES
     from hgn_spark.operators.similarity import cosine
 
-    from hgn_spark.operators.dedup import dedup_embedding_neardup_pairs
+    from hgn_spark.operators.dedup import dedup_embedding_neardup_pairs_recall
 
     got = {
         (r["v1"], r["v2"])
-        for r in dedup_embedding_neardup_pairs(spark, SF_SMOKE).collect()
+        for r in dedup_embedding_neardup_pairs_recall(spark, SF_SMOKE).collect()
     }
     emb = load_table(spark, SF_SMOKE, "embeddings")
     a = emb.select(F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"))
@@ -245,28 +248,18 @@ def test_embedding_neardup_subset_of_bruteforce(spark):
         .collect()
     }
     assert got <= brute
-    assert len(got) > 0  # SRP recall at cosine≈0.4 is low by design, not zero
+    assert len(got) > 0  # SRP recall at cosine≈0.4 is low by design (sized for 0.9), not zero
 
 
 def test_ivf_recall_vs_bruteforce(spark):
+    """The production IVF branch keeps its recall against the exact
+    yardstick (nprobe calibrated for 90% on a 64-query sample)."""
     rows = SPECS["simsearch_topk_cosine"].fn(spark, SF_SMOKE).collect()
     bf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "exact"}
-    ivf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "seed"}
+    ivf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "ivf_adaptive"}
     assert len(bf) == 50  # 10 queries × top-5
     recall = len(bf & ivf) / len(bf)
-    assert recall >= 0.8  # 0.96 observed with 20 lists / 3 probes
-
-
-def test_ivf_kmeans_recall_vs_bruteforce(spark):
-    """The Lloyd-trained variant keeps the recall floor. On this
-    isotropic corpus it measures 0.92 (vs 0.96 for stride seeds at the
-    same probed candidate count) — the expected no-cluster-structure
-    outcome, see simsearch_ivf_kmeans_topk's docstring."""
-    rows = SPECS["simsearch_topk_cosine"].fn(spark, SF_SMOKE).collect()
-    bf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "exact"}
-    ivf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "kmeans"}
-    recall = len(bf & ivf) / len(bf)
-    assert recall >= 0.8  # 0.92 observed with 20 lists / 3 probes
+    assert recall >= 0.8  # 0.86 observed
 
 
 def test_lloyd_avg_matches_pinned_fold(spark):
@@ -275,7 +268,6 @@ def test_lloyd_avg_matches_pinned_fold(spark):
     cluster ids, same centroid arrays — so swapping the bounded-state
     path in changes nothing downstream."""
     from hgn_spark.operators.similarity import (
-        CENTROID_STRIDE,
         _lloyd_refine_pinned,
         lloyd_refine,
         load_embeddings,
@@ -283,7 +275,7 @@ def test_lloyd_avg_matches_pinned_fold(spark):
     from pyspark.sql import functions as F
 
     emb = load_embeddings(spark, SF_SMOKE)
-    seeds = emb.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
+    seeds = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("cent_e"),
         F.col("nrm").alias("cent_n"),
@@ -372,73 +364,6 @@ def test_df_cap_preserves_high_jaccard_pairs(spark):
         .select("h")
     )
     assert hot.count() > 0, "df_cap=4 never fired — raise the bar"
-
-
-def test_srp_adaptive_branch_differs_from_pinned(spark):
-    """The `srp_adaptive` branch must use a genuinely different (wider)
-    signature than the pinned 16-bit `srp` branch at the test sf —
-    identical pair sets at every sf would mean the adaptive formula
-    never re-buckets anything and the branch proves nothing."""
-    from hgn_spark.operators.dedup import SRP_BITS, srp_adaptive_bits
-    from hgn_spark.operators.similarity import load_embeddings
-
-    n = load_embeddings(spark, SF_SMOKE).count()
-    assert srp_adaptive_bits(n) > SRP_BITS
-
-    rows = SPECS["dedup_minhash_lsh_pairs"].fn(spark, SF_SMOKE).collect()
-    srp = {(r["a"], r["b"]) for r in rows if r["method"] == "srp"}
-    ada = {(r["a"], r["b"]) for r in rows if r["method"] == "srp_adaptive"}
-    assert ada != srp, "wider signature re-bucketed nothing at this sf"
-    assert len(ada) > 0
-
-
-def test_srp_fused_multi_matches_standalone(spark):
-    """The registered row's fused multi-width SRP pass must reproduce
-    the standalone per-width pipelines exactly — the fusion is a
-    physical optimization (shared signature scan / bucket join /
-    verify), never a semantic change."""
-    from hgn_spark.operators.dedup import (
-        SRP_BITS,
-        _srp_pairs_multi,
-        dedup_embedding_neardup_pairs,
-        dedup_embedding_neardup_pairs_adaptive,
-        dedup_embedding_neardup_pairs_recall,
-        srp_recall_bands,
-    )
-
-    fused = _srp_pairs_multi(
-        spark,
-        SF_SMOKE,
-        [
-            ("srp", SRP_BITS),
-            ("srp_adaptive", 18),
-            # the r12 multi-band config shape: (label, n_bits, n_bands)
-            ("srp_recall", *srp_recall_bands(500)),
-        ],
-    ).collect()
-    got_srp = {(r["v1"], r["v2"], r["cosine"]) for r in fused if r["label"] == "srp"}
-    got_ada = {
-        (r["v1"], r["v2"], r["cosine"]) for r in fused if r["label"] == "srp_adaptive"
-    }
-    got_rec = {
-        (r["v1"], r["v2"], r["cosine"]) for r in fused if r["label"] == "srp_recall"
-    }
-    want_srp = {
-        (r["v1"], r["v2"], r["cosine"])
-        for r in dedup_embedding_neardup_pairs(spark, SF_SMOKE).collect()
-    }
-    want_ada = {
-        (r["v1"], r["v2"], r["cosine"])
-        for r in dedup_embedding_neardup_pairs_adaptive(spark, SF_SMOKE).collect()
-    }
-    want_rec = {
-        (r["v1"], r["v2"], r["cosine"])
-        for r in dedup_embedding_neardup_pairs_recall(spark, SF_SMOKE).collect()
-    }
-    assert got_srp == want_srp
-    assert got_ada == want_ada
-    assert got_rec == want_rec
-    assert len(got_rec) > 0
 
 
 def test_cap_branch_strict_subset_of_all(spark):
@@ -685,6 +610,54 @@ def test_clear_session_caches_drops_and_rebuilds(spark):
     assert not dedup._NGRAM_PAIRS_CACHE
     assert not gq._EDGES_CACHE
     assert dedup._doc_shingle_sets(spark, SF_SMOKE).count() == before
+
+
+def test_session_caches_see_appended_files(spark, tmp_path):
+    """A part file appended under a cached table path in the same
+    session is visible on the next call: the embeddings frame, its
+    count and the shingle-set table are keyed on a fingerprint of the
+    table's files, not on (applicationId, sf_dir) alone."""
+    from pyspark.sql import functions as F
+
+    from hgn_spark.operators.dedup import _doc_shingle_sets
+    from hgn_spark.operators.similarity import emb_count, load_embeddings
+
+    sf_dir = str(tmp_path / "appended")
+    emb_path = f"{sf_dir}/embeddings.parquet"
+
+    def emb(lo: int, hi: int):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("vec_id"),
+            F.array(
+                (F.col("id") % 7).cast("float"),
+                F.lit(1.0).cast("float"),
+                (F.col("id") % 3).cast("float"),
+            ).alias("embedding"),
+        ).coalesce(1)
+
+    emb(0, 10).write.parquet(emb_path)
+    assert emb_count(spark, sf_dir) == 10
+    assert load_embeddings(spark, sf_dir).count() == 10
+    emb(10, 15).write.mode("append").parquet(emb_path)
+    assert emb_count(spark, sf_dir) == 15
+    got = {r["vec_id"] for r in load_embeddings(spark, sf_dir).collect()}
+    assert got == set(range(15))
+
+    docs_path = f"{sf_dir}/documents.parquet"
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+
+    def docs(lo: int, hi: int):
+        rows = [
+            (i, f"document {i} has words w{i}a w{i}b w{i}c", "en", "web", 30)
+            for i in range(lo, hi)
+        ]
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    docs(0, 5).write.parquet(docs_path)
+    assert _doc_shingle_sets(spark, sf_dir).count() == 5
+    docs(5, 8).write.mode("append").parquet(docs_path)
+    got = {r["doc_id"] for r in _doc_shingle_sets(spark, sf_dir).collect()}
+    assert got == set(range(8))
 
 
 def test_register_cache_structural_clearing(spark):
@@ -977,16 +950,31 @@ def test_assign_splits_deterministic_disjoint_stable(spark):
 
 
 def test_lsh_topk_recall_and_candidate_bound(spark):
-    """LSH-bucketed ANN: recall floor on the no-structure smoke corpus
+    """LSH-bucketed ANN at its default, occupancy-targeted width
+    (lsh_adaptive_bits): recall floor on the no-structure smoke corpus
     (documented as far below trained IVF — the data-independence
-    tradeoff) and the probe volume stays a small corpus fraction."""
+    tradeoff), and per-query probe volume bounded by the width rule —
+    (1 + bits) probed buckets of ~LSH_TARGET_BUCKET vectors each, not
+    a growing corpus fraction."""
     from pyspark.sql import functions as F
 
     from hgn_spark.operators.similarity import (
-        LSH_BITS,
+        LSH_MAX_BITS,
+        LSH_MULTIPROBE,
+        LSH_TARGET_BUCKET,
+        lsh_adaptive_bits,
         simsearch_exact_topk,
         simsearch_lsh_topk,
     )
+
+    # Candidate bound of the width rule: 2^bits >= n / LSH_TARGET_BUCKET
+    # below the clamp, so the expected probed volume (1 + bits) * n /
+    # 2^bits stays within (1 + bits) * LSH_TARGET_BUCKET per query.
+    assert LSH_MULTIPROBE == 1
+    for n in [2**k + d for k in range(7, 30) for d in (-1, 0, 1)]:
+        bits = lsh_adaptive_bits(n)
+        if bits < LSH_MAX_BITS:
+            assert (1 + bits) * n / 2**bits <= (1 + bits) * LSH_TARGET_BUCKET, n
 
     bf = {
         (r["q_id"], r["vec_id"])
@@ -994,8 +982,14 @@ def test_lsh_topk_recall_and_candidate_bound(spark):
     }
     lsh_df = simsearch_lsh_topk(spark, SF_SMOKE)
     lsh = {(r["q_id"], r["vec_id"]) for r in lsh_df.collect()}
+    # the default width IS lsh_adaptive_bits of the corpus (3 at n=500)
+    assert lsh_adaptive_bits(500) == 3
+    explicit = simsearch_lsh_topk(spark, SF_SMOKE, n_bits=3)
+    assert sorted(map(tuple, explicit.collect())) == sorted(
+        map(tuple, lsh_df.collect())
+    )
     assert len(lsh) == len(bf)  # full top-k emitted for every query
-    assert len(bf & lsh) / len(bf) >= 0.1  # smoke floor; 0.36 at sf0.01
+    assert len(bf & lsh) / len(bf) >= 0.1  # smoke floor
     # rank column well-formed: exactly ranks 1..k per query
     ranks = (
         lsh_df.groupBy("q_id").agg(F.collect_set("rank").alias("r")).collect()
@@ -1406,35 +1400,6 @@ def test_vocab_top_pairs_plans_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_srp_bucket_cap_bounds_candidates(spark):
-    """bucket_cap skips mega-buckets before the pair join: capped
-    output is a subset of the uncapped pairs, a huge cap changes
-    nothing, and a cap of 1 kills every candidate (no bucket with 2+
-    members survives, so no pairs can form)."""
-    from hgn_spark.operators.dedup import dedup_embedding_neardup_pairs
-
-    base = {
-        (r["v1"], r["v2"])
-        for r in dedup_embedding_neardup_pairs(spark, SF_SMOKE).collect()
-    }
-    huge = {
-        (r["v1"], r["v2"])
-        for r in dedup_embedding_neardup_pairs(
-            spark, SF_SMOKE, bucket_cap=10**9
-        ).collect()
-    }
-    assert huge == base
-    one = dedup_embedding_neardup_pairs(spark, SF_SMOKE, bucket_cap=1).count()
-    assert one == 0
-    mid = {
-        (r["v1"], r["v2"])
-        for r in dedup_embedding_neardup_pairs(
-            spark, SF_SMOKE, bucket_cap=5
-        ).collect()
-    }
-    assert mid <= base
-
-
 def test_chunk_documents_plans_zero_exchange(spark):
     """Chunking must stay entirely scan-side: tokenize + sequence/slice
     HOFs + one explode, NO Exchange — the property that makes it
@@ -1509,45 +1474,29 @@ def test_stale_context_block_ids_dropped_without_release(spark):
 
 
 def test_ivf_adaptive_and_lsh_adaptive_branches(spark):
-    """The r10 scale-mitigation branches (100x-probe findings):
-
-    - `ivf_adaptive` must genuinely re-derive centroids (sqrt-n
-      stride != the pinned stride at this sf, and the top-k set
-      diverges from `seed`). Its recall floor is intentionally modest:
-      the pinned-stride variant's 0.96 here is partly an artifact —
-      every query (vec_id % 50) is itself a centroid (% 25), so its
-      own inverted list is its neighborhood; the sqrt-n stride (23 at
-      n=500) removes that coincidence and leaves honest isotropic-
-      corpus IVF recall (~0.38 at 3/22 lists probed).
-    - `lsh_adaptive` narrows to 3 bits at n=500 (occupancy-targeted),
-      diverging from the 5-bit `lsh` branch; wider buckets probe MORE
-      of the corpus, so its recall must be >= the fixed branch's.
-    """
+    """The production ANN branches re-derive their sizing from the
+    corpus: `ivf_adaptive` uses ceil(sqrt(n)) centroids (stride 23 at
+    n=500) and `lsh_adaptive` the occupancy-targeted width (3 bits at
+    n=500). Both keep a recall floor against the exact yardstick, and
+    every branch returns a full top-k ranking per query."""
     from hgn_spark.operators.similarity import (
-        CENTROID_STRIDE,
-        LSH_BITS,
         ivf_adaptive_stride,
         load_embeddings,
         lsh_adaptive_bits,
     )
 
     n = load_embeddings(spark, SF_SMOKE).count()
-    assert ivf_adaptive_stride(n) != CENTROID_STRIDE
-    assert lsh_adaptive_bits(n) < LSH_BITS
+    assert ivf_adaptive_stride(n) == 23
+    assert lsh_adaptive_bits(n) == 3
 
     rows = SPECS["simsearch_topk_cosine"].fn(spark, SF_SMOKE).collect()
     by: dict[str, set] = {}
     for r in rows:
         by.setdefault(r["variant"], set()).add((r["q_id"], r["vec_id"]))
+    assert set(by) == {"exact", "ivf_adaptive", "lsh_adaptive", "ivf_linear"}
     bf = by["exact"]
-    assert by["ivf_adaptive"] != by["seed"]
-    assert by["lsh_adaptive"] != by["lsh"]
     assert len(bf & by["ivf_adaptive"]) / len(bf) >= 0.2
-    assert (
-        len(bf & by["lsh_adaptive"]) / len(bf)
-        >= len(bf & by["lsh"]) / len(bf)
-    )
-    # every branch returns a full top-k ranking per query
+    assert len(bf & by["lsh_adaptive"]) / len(bf) >= 0.3  # 0.56 observed
     for v, got in by.items():
         assert len(got) == len(bf), v
 
@@ -1630,115 +1579,48 @@ def test_lsh_adaptive_bits_integer_exact():
     assert lsh_adaptive_bits(10**9) == LSH_MAX_BITS
 
 
-def test_simhash_bucket_cap_subset_and_nonvacuous(spark):
-    """The chunk-bucket cap gates candidate generation only: every
-    capped pair appears in the uncapped result with the SAME hamming
-    (verify is unchanged), and at the pinned SIMHASH_CAP the capped
-    set is strictly smaller but non-empty at this sf — the branch
-    demonstrably drops mega-bucket candidates rather than vacuously
-    reproducing the uncapped result."""
-    from hgn_spark.operators.dedup import SIMHASH_CAP, dedup_simhash_pairs
+def test_simhash_combo_keying_finds_every_pair_within_hamming(spark):
+    """The Manku combination keying (20 tables of 3-of-6 8-bit chunks)
+    must return EXACTLY every pair within SIMHASH_MAX_HAMMING: by
+    pigeonhole a pair at hamming <= 3 leaves some 3-chunk combination
+    untouched, so its candidates cover the all-pairs truth and the
+    bit_count(xor) verify keeps exactly that set. Pinned pair for
+    pair, hamming for hamming, against an all-pairs cross join over
+    the same signatures (the oracle replays a 4 x 12-bit chunk keying
+    instead, which the same argument makes identical)."""
+    from pyspark.sql import functions as F
 
-    full = {
-        (r["d1"], r["d2"]): r["hamming"]
-        for r in dedup_simhash_pairs(spark, SF_SMOKE).collect()
-    }
-    capped = {
-        (r["d1"], r["d2"]): r["hamming"]
-        for r in dedup_simhash_pairs(
-            spark, SF_SMOKE, bucket_cap=SIMHASH_CAP
-        ).collect()
-    }
-    assert set(capped) < set(full)
-    assert len(capped) > 0
-    for k, h in capped.items():
-        assert full[k] == h
-
-
-def test_simhash_combo_scheme_identical_to_chunk(spark):
-    """The Manku combination bucketing (scheme='combo', r11 production
-    path) must return EXACTLY the chunk scheme's verified pairs: both
-    candidate sets are supersets of every hamming <= 3 pair by
-    pigeonhole (>= 1 clean 12-bit chunk of 4, resp. >= 1 clean 3-of-6
-    8-bit-chunk combination), and the bit_count(xor) verify is shared —
-    so the keying is a physical choice, never a semantic one. This is
-    the theorem the driver hash re-proves per sf via the shared
-    oracle; here it is pinned directly, pair for pair, hamming for
-    hamming."""
-    from hgn_spark.operators.dedup import dedup_simhash_pairs
-
-    chunk = {
-        (r["d1"], r["d2"]): r["hamming"]
-        for r in dedup_simhash_pairs(spark, SF_SMOKE).collect()
-    }
-    combo = {
-        (r["d1"], r["d2"]): r["hamming"]
-        for r in dedup_simhash_pairs(spark, SF_SMOKE, scheme="combo").collect()
-    }
-    assert combo == chunk
-    assert len(combo) > 0
-
-
-def test_simhash_fused_multi_matches_standalone(spark):
-    """The registered row's fused three-config simhash pass must
-    reproduce the standalone per-config pipelines exactly — a physical
-    optimization (shared signature fold / labeled bucket join / shared
-    verify), never a semantic change (the `_srp_pairs_multi` contract,
-    simhash edition)."""
     from hgn_spark.operators.dedup import (
-        SIMHASH_CAP,
-        _simhash_pairs_multi,
+        SIMHASH_BITS,
+        SIMHASH_MAX_HAMMING,
+        _doc_shingle_sets,
         dedup_simhash_pairs,
     )
 
-    fused = _simhash_pairs_multi(
-        spark,
-        SF_SMOKE,
-        [
-            ("simhash", "chunk", None),
-            ("simhash_cap", "chunk", SIMHASH_CAP),
-            ("simhash_manku", "combo", None),
-        ],
-    ).collect()
-    by_label = {}
-    for r in fused:
-        by_label.setdefault(r["label"], {})[(r["d1"], r["d2"])] = r["hamming"]
-    for label, kwargs in (
-        ("simhash", {}),
-        ("simhash_cap", {"bucket_cap": SIMHASH_CAP}),
-        ("simhash_manku", {"scheme": "combo"}),
-    ):
-        solo = {
-            (r["d1"], r["d2"]): r["hamming"]
-            for r in dedup_simhash_pairs(spark, SF_SMOKE, **kwargs).collect()
-        }
-        assert by_label.get(label, {}) == solo, label
-    assert len(by_label["simhash"]) > 0
-
-
-def test_lsh_topk_fused_multi_matches_standalone(spark):
-    """The registered row's fused multi-width LSH pass must reproduce
-    the standalone per-width pipelines exactly — a physical
-    optimization (shared projections / probe join / re-rank), never a
-    semantic change (the `_srp_pairs_multi` contract, ANN edition)."""
-    from hgn_spark.operators.similarity import (
-        _lsh_topk_multi,
-        simsearch_lsh_topk,
+    sig = _doc_shingle_sets(spark, SF_SMOKE).filter(F.col("sz") > 0).select(
+        "doc_id",
+        F.expr(
+            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
+            "(acc, i) -> acc + "
+            "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
+            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
+        ).alias("sig"),
     )
-
-    fused = _lsh_topk_multi(spark, SF_SMOKE, [("a", 5), ("b", 3)]).collect()
-    for label, bits in (("a", 5), ("b", 3)):
-        got = sorted(
-            (r["q_id"], r["vec_id"], r["score"], r["rank"])
-            for r in fused
-            if r["label"] == label
-        )
-        want = sorted(
-            tuple(r)
-            for r in simsearch_lsh_topk(spark, SF_SMOKE, n_bits=bits).collect()
-        )
-        assert got == want, label
-        assert len(got) > 0
+    a = sig.select(F.col("doc_id").alias("d1"), F.col("sig").alias("s1"))
+    b = sig.select(F.col("doc_id").alias("d2"), F.col("sig").alias("s2"))
+    truth = {
+        (r["d1"], r["d2"]): r["h"]
+        for r in a.join(b, F.col("d1") < F.col("d2"))
+        .select("d1", "d2", F.bit_count(F.col("s1").bitwiseXOR(F.col("s2"))).alias("h"))
+        .filter(F.col("h") <= SIMHASH_MAX_HAMMING)
+        .collect()
+    }
+    combo = {
+        (r["d1"], r["d2"]): r["hamming"]
+        for r in dedup_simhash_pairs(spark, SF_SMOKE).collect()
+    }
+    assert combo == truth
+    assert len(combo) > 0
 
 
 def test_jaccard_dispatch_rule_benign_corpus(spark):
@@ -1849,29 +1731,6 @@ def test_srp_recall_bands_sizing_and_parity(spark):
     assert got == want
 
 
-def test_minhash_recall_sized_superset_of_pinned(spark, exact_pairs):
-    """The recall-sized sketch (24 perms / 6 bands) extends the SAME
-    md5 permutation sequence, so its first 4 bands are the pinned
-    sketch's 4 bands verbatim — its verified pairs are a SUPERSET of
-    the pinned branch's and still a subset of exact-jaccard truth
-    (more bands only ever add candidates; the verify is exact)."""
-    from hgn_spark.operators.dedup import minhash_lsh_pairs, minhash_recall_perms
-
-    pinned = {
-        (r["d1"], r["d2"])
-        for r in minhash_lsh_pairs(spark, SF_SMOKE).collect()
-    }
-    num_perm, bands = minhash_recall_perms()
-    sized = {
-        (r["d1"], r["d2"])
-        for r in minhash_lsh_pairs(
-            spark, SF_SMOKE, num_perm=num_perm, bands=bands
-        ).collect()
-    }
-    assert pinned <= sized <= exact_pairs
-    assert len(sized) / len(exact_pairs) >= 0.9
-
-
 def test_sorted_run_stats_matches_counter(spark):
     """The scan-side run-length fold that replaced the repetition
     block's explode + groupBy (r14) must agree with a Counter-based
@@ -1903,42 +1762,3 @@ def test_sorted_run_stats_matches_counter(spark):
         dup = sum(v for v in cnt.values() if v > 1)
         nd = len(cnt)
         assert got[i] == (top, dup, nd), (i, c, got[i], (top, dup, nd))
-
-
-def test_minhash_nested_matches_standalone_arms(spark):
-    """r15 (VERDICT r14 #3): the nested one-pipeline form must emit
-    exactly the standalone pinned sketch's pairs under in_inner=true
-    and exactly the standalone recall-sized sketch's pairs overall,
-    with identical jaccard scores."""
-    from hgn_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_nested,
-        minhash_recall_perms,
-    )
-
-    nested = {
-        (r["d1"], r["d2"]): (r["jaccard"], r["in_inner"])
-        for r in minhash_lsh_pairs_nested(spark, SF_SMOKE).collect()
-    }
-    pinned = {
-        (r["d1"], r["d2"]): r["jaccard"]
-        for r in minhash_lsh_pairs(spark, SF_SMOKE).collect()
-    }
-    np_, nb = minhash_recall_perms()
-    recall = {
-        (r["d1"], r["d2"]): r["jaccard"]
-        for r in minhash_lsh_pairs(
-            spark, SF_SMOKE, num_perm=np_, bands=nb
-        ).collect()
-    }
-    assert {k: v for k, (v, _) in nested.items()} == recall
-    assert {k: v for k, (v, f) in nested.items() if f} == pinned
-
-
-def test_minhash_nested_rejects_non_prefix_sizing(spark):
-    import pytest as _pytest
-
-    from hgn_spark.operators.dedup import minhash_lsh_pairs_nested
-
-    with _pytest.raises(ValueError, match="band-prefix"):
-        minhash_lsh_pairs_nested(spark, SF_SMOKE, inner=(16, 4), outer=(24, 8))

@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from hgn_spark.registry import load_all
-from tests.conftest import SF_SMOKE
+from tests.conftest import REPO, SF_SMOKE
 
 SPECS = load_all()
 
@@ -174,23 +174,23 @@ def test_bench_headline_covers_driver_window():
 
 def test_branch_roles_match_reality(spark):
     """hgn_spark.branches.BRANCH_ROLES is the single source of truth
-    for which labeled branches of a multi-branch row are
-    baseline-for-evidence vs production-at-scale (VERDICT r10 #4:
-    ARCHITECTURE renders from it, scale probes consult it). The map
-    rots silently if a row renames or adds a branch — so pin that the
-    mapped labels are EXACTLY the branch values the row emits, and
-    that every row/composite the map names exists."""
+    for which labeled branches of a multi-branch row are ground-truth
+    yardsticks vs production-at-scale (ARCHITECTURE renders from it,
+    scale probes consult it). The map rots silently if a row renames
+    or adds a branch — so pin that the mapped labels are EXACTLY the
+    branch values the row emits, and that every row/composite the map
+    names exists."""
     from hgn_spark.branches import (
         BRANCH_ROLES,
         COMPOSITE_SCALE_UNSAFE,
-        EVIDENCE,
+        GROUND_TRUTH,
         PRODUCTION,
     )
 
     specs = load_all()
     for row, (col, roles, _note) in BRANCH_ROLES.items():
         assert row in specs, f"{row} not registered"
-        assert set(roles.values()) <= {EVIDENCE, PRODUCTION}
+        assert set(roles.values()) <= {GROUND_TRUTH, PRODUCTION}
         got = {
             r[0]
             for r in specs[row].fn(spark, SF_SMOKE).select(col).distinct().collect()
@@ -199,10 +199,19 @@ def test_branch_roles_match_reality(spark):
             f"{row}.{col}: map says {sorted(roles)} but the row emits "
             f"{sorted(got)}"
         )
-        # Every multi-branch row with a measured scale-killer must ship
-        # at least one production-at-scale branch.
+        # Every multi-branch row must ship at least one
+        # production-at-scale branch.
         assert PRODUCTION in roles.values(), f"{row} has no production branch"
     for composite, row in COMPOSITE_SCALE_UNSAFE.items():
         assert row in BRANCH_ROLES, (
             f"composite {composite} points at unmapped row {row}"
         )
+
+
+def test_architecture_branch_table_is_rendered():
+    """ARCHITECTURE.md says its branch-role table is the output of
+    ``python -m hgn_spark.branches``; hold it to that, verbatim."""
+    from hgn_spark.branches import render_table
+
+    doc = (REPO / "ARCHITECTURE.md").read_text(encoding="utf-8")
+    assert render_table() in doc
